@@ -95,6 +95,62 @@ def _surface_batch_stats(out, store):
         out["healed_tails"] = stats["healed_tails"]
 
 
+def _open_text_store(warehouse):
+    """The text dedup store at ``warehouse``: reopened under its OWN
+    stored config, or created with library defaults."""
+    from getl_spark.dedupstore import DedupStore
+
+    try:
+        return DedupStore.open(warehouse)
+    except ValueError:
+        return DedupStore(warehouse)
+
+
+def _maintenance_requested(args) -> bool:
+    return bool(
+        args.compact
+        or args.expire_keep_last is not None
+        or args.prune_dropped_below is not None
+        or args.remove_orphans_older_than is not None
+    )
+
+
+def _ingest_batch(spark, store, args, reg, path, **cols) -> dict:
+    """``dedup``/``embdedup`` ingest: one add_batch over the input at
+    ``path``, kept rows written to --out when given."""
+    batch = _resolve_input(spark, path, reg, lambda p: spark.read.parquet(p))
+    n_in = batch.count()
+    kept = store.add_batch(
+        spark, batch, require_monotonic=not args.allow_unordered, **cols
+    )
+    if args.out:
+        kept.write.mode("overwrite").parquet(args.out)
+        # explicit schema: an all-dropped batch writes zero part
+        # files and a bare read cannot infer one
+        n_kept = spark.read.schema(kept.schema).parquet(args.out).count()
+    else:
+        n_kept = kept.count()
+    out = {"batch_rows": n_in, "kept": n_kept, "dropped": n_in - n_kept}
+    _surface_batch_stats(out, store)
+    return out
+
+
+def _finish_store_run(spark, store, args, out, t0) -> None:
+    """Maintenance tail shared by ``dedup`` and ``embdedup``: prune
+    BEFORE compaction so the rewrite also folds files, then expire and
+    sweep orphans; print the result line."""
+    if args.prune_dropped_below is not None:
+        out["pruned"] = store.prune_dropped(spark, args.prune_dropped_below)
+    if args.compact:
+        out["compacted"] = store.compact(spark)
+    if args.expire_keep_last is not None:
+        out["expired"] = store.expire(args.expire_keep_last)
+    if args.remove_orphans_older_than is not None:
+        out["orphans_removed"] = store.remove_orphans(args.remove_orphans_older_than)
+    out.update(corpus_size=store.corpus_size(), sec=round(time.monotonic() - t0, 1))
+    print(json.dumps(out))
+
+
 def main(argv=None):
     p = argparse.ArgumentParser(prog="getl_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -356,13 +412,7 @@ def main(argv=None):
         if args.dedup_store and args.embdedup_store:
             p.error("--dedup-store and --embdedup-store are mutually exclusive")
         if args.dedup_store:
-            from getl_spark.dedupstore import DedupStore
-
-            swh = _resolve_warehouse(args.dedup_store, reg)
-            try:
-                store = DedupStore.open(swh)
-            except ValueError:
-                store = DedupStore(swh)  # new store, library defaults
+            store = _open_text_store(_resolve_warehouse(args.dedup_store, reg))
         elif args.embdedup_store:
             from getl_spark.dedupstore import EmbDedupStore
 
@@ -431,13 +481,7 @@ def main(argv=None):
             events = spec["path"]
         store = None
         if args.dedup_store:
-            from getl_spark.dedupstore import DedupStore
-
-            swh = _resolve_warehouse(args.dedup_store, reg)
-            try:
-                store = DedupStore.open(swh)
-            except ValueError:
-                store = DedupStore(swh)
+            store = _open_text_store(_resolve_warehouse(args.dedup_store, reg))
         t = StreamingTailer(
             spark,
             _resolve_warehouse(args.warehouse, reg),
@@ -532,13 +576,7 @@ def main(argv=None):
 
         reg = _registry(args.config)
         wh = _resolve_warehouse(args.warehouse, reg)
-        maintenance = (
-            args.compact
-            or args.expire_keep_last is not None
-            or args.prune_dropped_below is not None
-            or args.remove_orphans_older_than is not None
-        )
-        if args.docs is None and not maintenance:
+        if args.docs is None and not _maintenance_requested(args):
             p.error("dedup: --docs is required unless running maintenance "
                     "(--compact/--expire-keep-last/--prune-dropped-below)")
         t0 = time.monotonic()
@@ -557,51 +595,17 @@ def main(argv=None):
             )
         out: dict = {}
         if args.docs is not None:
-            batch = _resolve_input(
-                spark, args.docs, reg, lambda path: spark.read.parquet(path)
+            out = _ingest_batch(
+                spark, store, args, reg, args.docs,
+                text_col=args.text_col, id_col=args.id_col,
             )
-            n_in = batch.count()
-            kept = store.add_batch(
-                spark, batch, text_col=args.text_col, id_col=args.id_col,
-                require_monotonic=not args.allow_unordered,
-            )
-            if args.out:
-                kept.write.mode("overwrite").parquet(args.out)
-                # explicit schema: an all-dropped batch writes zero part
-                # files and a bare read cannot infer one
-                n_kept = spark.read.schema(kept.schema).parquet(args.out).count()
-            else:
-                n_kept = kept.count()
-            out.update(batch_rows=n_in, kept=n_kept, dropped=n_in - n_kept)
-            _surface_batch_stats(out, store)
-        if args.prune_dropped_below is not None:
-            # prune BEFORE compaction so the rewrite also folds files
-            out["pruned"] = store.prune_dropped(spark, args.prune_dropped_below)
-        if args.compact:
-            out["compacted"] = store.compact(spark)
-        if args.expire_keep_last is not None:
-            out["expired"] = store.expire(args.expire_keep_last)
-        if args.remove_orphans_older_than is not None:
-            out["orphans_removed"] = store.remove_orphans(
-                args.remove_orphans_older_than
-            )
-        out.update(
-            corpus_size=store.corpus_size(),
-            sec=round(time.monotonic() - t0, 1),
-        )
-        print(json.dumps(out))
+        _finish_store_run(spark, store, args, out, t0)
     elif args.cmd == "embdedup":
         from getl_spark.dedupstore import EmbDedupStore
 
         reg = _registry(args.config)
         wh = _resolve_warehouse(args.warehouse, reg)
-        maintenance = (
-            args.compact
-            or args.expire_keep_last is not None
-            or args.prune_dropped_below is not None
-            or args.remove_orphans_older_than is not None
-        )
-        if args.vectors is None and not maintenance:
+        if args.vectors is None and not _maintenance_requested(args):
             p.error("embdedup: --vectors is required unless running "
                     "maintenance (--compact/--expire-keep-last/"
                     "--prune-dropped-below/--remove-orphans-older-than)")
@@ -619,38 +623,11 @@ def main(argv=None):
             )
         out = {}
         if args.vectors is not None:
-            batch = _resolve_input(
-                spark, args.vectors, reg, lambda path: spark.read.parquet(path)
+            out = _ingest_batch(
+                spark, store, args, reg, args.vectors,
+                id_col=args.id_col, vec_col=args.vec_col,
             )
-            n_in = batch.count()
-            kept = store.add_batch(
-                spark, batch, id_col=args.id_col, vec_col=args.vec_col,
-                require_monotonic=not args.allow_unordered,
-            )
-            if args.out:
-                kept.write.mode("overwrite").parquet(args.out)
-                n_kept = spark.read.schema(kept.schema).parquet(args.out).count()
-            else:
-                n_kept = kept.count()
-            out.update(batch_rows=n_in, kept=n_kept, dropped=n_in - n_kept)
-            _surface_batch_stats(out, store)
-        if args.prune_dropped_below is not None:
-            # prune BEFORE compaction so the rewrite also folds files
-            # (same order as the dedup subcommand)
-            out["pruned"] = store.prune_dropped(spark, args.prune_dropped_below)
-        if args.compact:
-            out["compacted"] = store.compact(spark)
-        if args.expire_keep_last is not None:
-            out["expired"] = store.expire(args.expire_keep_last)
-        if args.remove_orphans_older_than is not None:
-            out["orphans_removed"] = store.remove_orphans(
-                args.remove_orphans_older_than
-            )
-        out.update(
-            corpus_size=store.corpus_size(),
-            sec=round(time.monotonic() - t0, 1),
-        )
-        print(json.dumps(out))
+        _finish_store_run(spark, store, args, out, t0)
     elif args.cmd == "copyfiles":
         import os as _os
 

@@ -1,62 +1,80 @@
 """Incremental near-dedup — the story pattern applied to dedup.
 
 No 100-TB pipeline re-dedups its corpus from scratch per ingest: the
-MinHash LSH index rows of every document ever seen persist in a lake
-table, and each new batch is (a) banded once, (b) joined against the
-standing index + itself for candidates, (c) Jaccard-verified, (d)
-appended to the index. Cost per batch is O(new docs + touched
-buckets), not O(corpus) — and as of round 6 the implementation
-actually delivers that bound on the contract path:
+LSH rows of every item ever seen persist in lake tables, and each new
+batch is (a) sketched once, (b) joined against the standing sketch
+tables + itself for candidates, (c) verified exactly, (d) appended.
+Cost per batch is O(new items + touched buckets), not O(corpus).
+
+One engine, two strategies. :class:`_DedupCore` owns everything the
+two stores share: the story state (watermark, pending crash tails,
+the reprocess carve-out, effective/committed id ranges, heal-claim
+verification), the candidate join, the heal anti-join for every table
+a crashed batch may have half-committed, the verdict table and
+:meth:`~_DedupCore.rejected_of`, ``open`` and config pinning, and the
+maintenance verbs. A strategy supplies only what really differs:
+
+- :class:`DedupStore` (text): MinHash band rows in ``_dedup_index``
+  plus optional winnowed fingerprints in ``_dedup_winnow``, Jaccard
+  verification against ``_dedup_docs``; ids in ``doc_id``. The INDEX
+  commit is the batch's done marker.
+- :class:`EmbDedupStore` (vectors): hyperplane-LSH bucket rows in
+  ``_embdedup_buckets``, exact-cosine verification against
+  ``_embdedup_vectors``; ids in ``vec_id``. The VECTORS commit is the
+  batch's done marker.
+
+Every other table of a batch is appended before the done table, under
+the same batch token. The contracts below hold for both strategies:
 
 - **Story filter / monotonic guard** read NO data at all: every
-  append stamps ``max_doc_id`` into its snapshot summary, so the
+  append stamps ``max_<id>`` into its snapshot summary, so the
   high-watermark is driver-side metadata (the same mechanism as the
   CDC checkpoint). Already-committed ids are skipped by
   ``id > watermark`` — zero Spark jobs. A replayed batch whose ids
   sit below the watermark is distinguished from a monotonicity
-  violation by a membership probe against the docs table pruned to
-  the batch ids' storage buckets (manifest pruning; runs only on
+  violation by a membership probe against the content table pruned
+  to the batch ids' storage buckets (manifest pruning; runs only on
   replays).
 - **Candidate join** touches only TOUCHED buckets: the new batch's
-  distinct ``(band_id, band_hash)`` set is broadcast and the stored
-  index is left-semi filtered on it — a map-side filter, so the
-  stored side is never shuffled — after a manifest-level prune to
-  the storage buckets those keys hash to. The cap window and the
-  pair join then see O(new + touched-bucket) rows. Per-bucket counts
-  stay exact because the semi filter keeps WHOLE buckets (the filter
-  key IS the bucket key), so no separate bucket-stats table is
-  needed for `_cap_buckets` correctness.
+  distinct sketch-key set is broadcast and the stored sketch table is
+  left-semi filtered on it — a map-side filter, so the stored side is
+  never shuffled — after a manifest-level prune to the storage
+  buckets those keys hash to. The cap window and the pair join then
+  see O(new + touched-bucket) rows. Per-bucket counts stay exact
+  because the semi filter keeps WHOLE buckets (the filter key IS the
+  bucket key), so no separate bucket-stats table is needed for
+  `_cap_buckets` correctness.
 - **Crash heal** is metadata-triggered: each batch carries a token
-  stamped into every table's summary; a docs/winnow snapshot whose
-  token never reached the index table marks a crashed tail, and only
-  then does the heal anti-join run — against a bucket-pruned,
-  id-range-filtered read. Tails resolve by TOKEN only: either the
-  crash was between one call's appends (same token reaches the index
-  on replay) or a replay whose input span covers the tail's inferred
-  id range stamps it into the index commit's ``heals`` list. The
-  index watermark moving past a tail's ids proves nothing — a later
-  batch commits without reprocessing the tail — so the story filter
-  treats ids inside a pending tail's range as REPROCESSABLE (they
-  pass the docs-membership probe yet were never judged). The hot
-  path runs no heal scan at all.
+  stamped into every table's summary; a snapshot whose token never
+  reached the done table marks a crashed tail, and only then does the
+  heal anti-join run — against a bucket-pruned, id-range-filtered
+  read. Tails resolve by TOKEN only: either the crash was between one
+  call's appends (same token reaches the done table on replay) or a
+  replay whose input span covers the tail's inferred id range stamps
+  it into the done commit's ``heals`` list. The done watermark moving
+  past a tail's ids proves nothing — a later batch commits without
+  reprocessing the tail — so the story filter treats ids inside a
+  pending tail's range as REPROCESSABLE (they pass the membership
+  probe yet were never judged). The hot path runs no heal scan at all.
 
 Reference analog: getl's story-table exactly-once skip
 (/root/reference/src/main/groovy/getl/files/Manager.groovy:936-948)
 applied to content identity instead of file names.
 
-Equality contract (pinned by test): with ingest-ordered doc ids
-(every new batch's ids are larger than all stored ids) and
+Equality contract (pinned by test): with ingest-ordered ids (every
+new batch's ids are larger than all stored ids) and
 ``max_bucket=None``, the union of ``add_batch`` outputs over any
-batch split equals the one-shot ``near_dedup_minhash(union,
-transitive=False)`` kept set — because the pairwise drop rule ("drop
-the higher id of each verified pair") never lets a later doc evict an
-earlier one, and the banded candidate join over (stored + new) index
-rows reproduces exactly the one-shot join's pairs that touch a new
-doc. Dropped docs' signatures stay in the index on purpose: the
-one-shot pair set includes pairs whose lower id was itself dropped,
-so the incremental index must too. The touched-bucket pruning does
-not perturb this: a pair whose higher id is new lives, by
-definition, in a bucket the new batch touches, and the semi filter
+batch split equals the one-shot pairwise drop over the same candidate
+generator (``near_dedup_minhash(union, transitive=False)`` for text,
+``embedding_near_dups`` pairs for vectors) — because the pairwise drop
+rule ("drop the higher id of each verified pair") never lets a later
+item evict an earlier one, and the banded candidate join over (stored
++ new) sketch rows reproduces exactly the one-shot join's pairs that
+touch a new item. Dropped items' sketch rows stay stored on purpose:
+the one-shot pair set includes pairs whose lower id was itself
+dropped, so the incremental index must too. The touched-bucket
+pruning does not perturb this: a pair whose higher id is new lives,
+by definition, in a bucket the new batch touches, and the semi filter
 keeps every stored member of each touched bucket.
 
 With ``max_bucket`` set, exact equality weakens to a one-sided
@@ -67,37 +85,38 @@ pairs whose bucket only later became degenerate). The cap is part of
 the store's pinned config, so batches can't silently mix caps.
 
 ``require_monotonic=False`` is the compatibility escape hatch: ids
-below the watermark are then legitimate new docs, so the story
-filter falls back to an anti-join against the standing index's id
-column (range-pruned to the batch's id span, but still a scan of the
-index id column — linear, documented). The O(new + touched) bound
-is a property of the contract path, as is batch==one-shot equality.
+below the watermark are then legitimate new items, so the story
+filter falls back to an anti-join against the done table's id column
+(range-pruned to the batch's id span, but still a scan of that
+column — linear, documented). The O(new + touched) bound is a
+property of the contract path, as is batch==one-shot equality.
 
 Stores written before round 6 lack the summary stamps; they are
-detected (any data snapshot missing ``max_doc_id``/``batch``) and
+detected (any data snapshot missing ``max_<id>``/``batch``) and
 serviced through the same legacy scan path.
 
 Maintenance & retention contract: an always-on ingest appends a file
 per touched bucket and a snapshot per batch, forever. ``compact()``
 folds small files bucket-locally, ``expire(keep_last)`` bounds
-snapshot metadata, and ``prune_dropped(before_doc_id)`` reclaims the
-band rows / texts / fingerprints of long-dropped docs (their verdict
-rows are kept, so replay recovery still works). All three stamp a
-maintenance marker into their snapshot summaries so the watermark
-reader skips them — they never flip a store onto the legacy path.
-Retention defaults keep everything: dropped docs' signatures are part
-of the equality contract above, so pruning them is an explicit,
-documented trade (see :meth:`DedupStore.prune_dropped`). ``expire``
-must keep at least the deepest crash-replay window you need — a
-crashed tail is only healable while its batch stamps are visible —
-and if every stamped append expires, the store safely (if slowly)
-falls back to the membership anti-join path rather than trusting a
-blank watermark.
+snapshot metadata, and ``prune_dropped(before_id)`` reclaims the
+sketch rows and content of long-dropped items (their verdict rows are
+kept, so replay recovery still works). All three stamp a maintenance
+marker into their snapshot summaries so the watermark reader skips
+them — they never flip a store onto the legacy path. Retention
+defaults keep everything: dropped items' sketch rows are part of the
+equality contract above, so pruning them is an explicit, documented
+trade (see :meth:`_DedupCore._prune_dropped`). ``expire`` must keep at
+least the deepest crash-replay window you need — a crashed tail is
+only healable while its batch stamps are visible — and if every
+stamped append expires, the store safely (if slowly) falls back to
+the membership anti-join path rather than trusting a blank watermark.
 """
 
 from __future__ import annotations
 
+import inspect
 import uuid
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -187,17 +206,8 @@ def _pending_tails(prior, done, key: str) -> list[dict]:
     resolution from exactly that and silently swallowed such tails on
     replay).
 
-    Each tail carries the EXACT id ranges its append added: every
-    stamped append records ``id_ranges`` — the driver-side list of
-    ``[lo, hi]`` spans its effective (non-committed-before) ids
-    occupied; usually one span, several when the append itself
-    reprocessed earlier tails. Appends from round-6 stores lack the
-    stamp; their single range is then inferred as ``(prev_hi, hi]``
-    from the preceding data summaries' watermarks — a conservative
-    superset, exact under the monotonic-id contract except that it
-    may reach below the batch's true lo into id space no committed
-    batch occupies (harmless: carving empty id space out of the
-    membership probe changes nothing).
+    Each tail carries the EXACT id ranges its append added (see
+    :func:`_summary_ranges`).
     """
     done_toks, stamped_committed = set(), []
     for s in _data_summaries(done):
@@ -206,17 +216,9 @@ def _pending_tails(prior, done, key: str) -> list[dict]:
         # STAMPED committed spans only — legacy inferred ranges are a
         # superset guess and must not shrink a tail (ADVICE r7 #1)
         stamped_committed.extend(s.get("id_ranges") or [])
-    tails, prev_hi = [], None
-    for s in _data_summaries(prior):
-        tok = s.get("batch")
-        hi = s.get(key)
-        ranges = s.get("id_ranges")
-        if ranges is None and hi is not None:
-            lo = None if prev_hi is None else prev_hi + 1
-            ranges = [[lo, int(hi)]]
-        if hi is not None:
-            hi = int(hi)
-            prev_hi = hi if prev_hi is None else max(prev_hi, hi)
+    tails = []
+    for s, ranges in _summary_ranges(prior, key):
+        tok, hi = s.get("batch"), s.get(key)
         if tok is None or tok in done_toks or not ranges:
             continue
         if stamped_committed:
@@ -238,8 +240,30 @@ def _pending_tails(prior, done, key: str) -> list[dict]:
             if not shrunk:
                 continue  # fully covered by stamped commits — resolved
             ranges = shrunk
-        tails.append({"batch": tok, "hi": hi, "ranges": ranges})
+        tails.append({"batch": tok, "hi": None if hi is None else int(hi), "ranges": ranges})
     return tails
+
+
+def _summary_ranges(table, key: str):
+    """``(summary, [[lo, hi], ...])`` per data summary of ``table``. Every
+    stamped append records ``id_ranges`` — the driver-side list of
+    ``[lo, hi]`` spans its effective (non-committed-before) ids
+    occupied; usually one span, several when the append itself
+    reprocessed earlier tails. Appends from round-6 stores lack the
+    stamp; their single range is then inferred as ``(prev_hi, hi]``
+    from the preceding data summaries' watermarks — a conservative
+    superset, exact under the monotonic-id contract except that it
+    may reach below the batch's true lo into id space no committed
+    batch occupies (harmless: carving empty id space out of the
+    membership probe changes nothing). Pure metadata."""
+    prev_hi = None
+    for s in _data_summaries(table):
+        hi, ranges = s.get(key), s.get("id_ranges")
+        if hi is not None:
+            if ranges is None:
+                ranges = [[None if prev_hi is None else prev_hi + 1, int(hi)]]
+            prev_hi = int(hi) if prev_hi is None else max(prev_hi, int(hi))
+        yield s, ranges
 
 
 def _reprocess_cond(tails: list[dict], id_expr):
@@ -298,21 +322,9 @@ def _healed_tokens(tails: list[dict], lo: int, hi: int) -> list[str]:
 
 def _committed_ranges(done, key: str) -> list[list[int | None]]:
     """``[lo, hi]`` id spans the ``done`` table's data summaries claim
-    as committed — stamped ``id_ranges`` where present, else inferred
-    as ``(prev_hi, hi]`` like :func:`_pending_tails`. Pure metadata;
-    used to stamp exact-gap ranges on the non-monotonic path."""
-    out, prev_hi = [], None
-    for s in _data_summaries(done):
-        hi = s.get(key)
-        ranges = s.get("id_ranges")
-        if ranges is None and hi is not None:
-            lo = None if prev_hi is None else prev_hi + 1
-            ranges = [[lo, int(hi)]]
-        if hi is not None:
-            hi = int(hi)
-            prev_hi = hi if prev_hi is None else max(prev_hi, hi)
-        out.extend(ranges or [])
-    return out
+    as committed (:func:`_summary_ranges`); used to stamp exact-gap
+    ranges on the non-monotonic path."""
+    return [r for _, ranges in _summary_ranges(done, key) for r in ranges or []]
 
 
 def _subtract_ranges(lo: int, hi: int, committed: list) -> list[list[int]]:
@@ -391,26 +403,585 @@ def _plan_string(df: DataFrame) -> str:
         return ""
 
 
-class DedupStore:
+def _not_monotonic(lo, hi) -> ValueError:
+    return ValueError(
+        f"add_batch: new ids must exceed all stored ids for the "
+        f"batch==incremental equality contract (new min {lo} <= stored "
+        f"max {hi}); pass require_monotonic=False to override"
+    )
+
+
+class _DedupCore:
+    """Story / heal / verdict / maintenance engine shared by
+    :class:`DedupStore` and :class:`EmbDedupStore` (module docstring).
+
+    A strategy sets the class constants below, builds ``cfg`` and calls
+    :meth:`_open` with its sketch tables, and implements ``_sketch``
+    (the batch's candidate-key rows per sketch table) and ``_verify``
+    (the exact pair check). Store tables, keyed by role name:
+
+    - one or more SKETCH tables (``ID_COL`` + key columns, bucketed by
+      the last key column); the first one stamps the config;
+    - the CONTENT table (``ID_COL`` + ``VALUE_COL``, bucketed by id);
+    - ``rejects``: persisted VERDICTS, one row per dropped id with the
+      smallest lower id it verified against. Committed before the done
+      table, so by the time the done commit marks a batch done — the
+      point at which the story filter starts skipping its ids — every
+      verdict of that batch is durable, and a replayed epoch recovers
+      its kept set via :meth:`rejected_of` instead of re-judging (the
+      CDC pre-merge composition relies on this).
+
+    After each ``add_batch`` call, ``last_batch_stats`` holds the
+    pruning evidence for that batch: which story path ran, how many
+    files of the first sketch table the candidate join read vs the
+    table total, the physical plan of the stored-side semi filter, and
+    whether a heal scan was needed.
+    """
+
+    ID_COL: str  # id column of every store table
+    VALUE_COL: str  # the content table's value column ...
+    VALUE_TYPE: str  # ... and its type
+    EVENT_COL: str  # event column CDCPipeline judges by default
+    PREFIX: str  # lake table name prefix
+    CONTENT: str  # role of the content table
+    DONE: str  # role of the table whose commit marks a batch done
+    CFG_TABLE: str  # role of the sketch table whose appends stamp cfg
+    CFG_MARK: str  # cfg key marking a config-stamped snapshot
+    KIND: str  # store kind, for error messages
+
+    def _open(self, warehouse: str, num_buckets: int, sketches: dict) -> None:
+        """Create-or-load the tables (``sketches``: role -> key-column
+        DDL, config table first) and check the pinned config — the
+        parameters are fixed at creation and stamped into the config
+        table's appends, so a mismatched reopen fails loudly instead of
+        silently mixing incompatible sketches. ``num_buckets`` sizes
+        the storage bucketing that manifest pruning keys on; at corpus
+        scale it should be large enough that one batch's keys touch a
+        small fraction of buckets. Reopening keeps the tables' own
+        stored spec."""
+        self.last_batch_stats: dict = {}
+        first, *rest = sketches.items()
+        specs = [
+            first,
+            (self.CONTENT, f"{self.VALUE_COL} {self.VALUE_TYPE}"),
+            ("rejects", "dup_of bigint"),
+            *rest,
+        ]
+        cat = LakeCatalog(warehouse)
+        self._t = {}
+        for role, cols in specs:
+            by = parse_ddl(cols).fieldNames()[-1] if role in sketches else self.ID_COL
+            self._t[role] = cat.create_table(
+                self.PREFIX + role,
+                parse_ddl(f"{self.ID_COL} bigint, {cols}"),
+                PartitionSpec.bucket(num_buckets, by),
+                if_not_exists=True,
+            )
+        self._sketches = list(sketches)
+        self.rejects = self._t["rejects"]
+        for snap in self._t[self.CFG_TABLE].meta["snapshots"]:
+            summ = snap.get("summary", {})
+            if self.CFG_MARK not in summ:
+                continue  # creation / unrelated snapshot
+            mismatch = {
+                k: (summ.get(k), self.cfg[k])
+                for k in self.cfg
+                if summ.get(k) != self.cfg[k]
+            }
+            if mismatch:
+                raise ValueError(
+                    f"{type(self).__name__} config mismatch vs existing index: {mismatch}"
+                )
+            break
+
+    @classmethod
+    def open(cls, warehouse: str):
+        """Reopen an existing store under its OWN stored configuration
+        (every config-table append stamps the full cfg into its
+        snapshot summary) — maintenance jobs (compact/expire/prune)
+        shouldn't have to repeat ingest parameters they can get wrong.
+        Raises if the warehouse has no ingested batch to read a spec
+        from."""
+        cat = LakeCatalog(warehouse)
+        if not cat.table_exists(cls.PREFIX + cls.CFG_TABLE):
+            raise ValueError(f"no {cls.KIND} at {warehouse!r}")
+        params = inspect.signature(cls).parameters
+        for snap in cat.load_table(cls.PREFIX + cls.CFG_TABLE).meta["snapshots"]:
+            summ = snap.get("summary") or {}
+            if cls.CFG_MARK in summ:
+                return cls(warehouse, **{k: v for k, v in summ.items() if k in params})
+        raise ValueError(
+            f"{cls.KIND} at {warehouse!r} has no ingested batch to read "
+            "its configuration from — pass the parameters explicitly"
+        )
+
+    def corpus_size(self) -> int:
+        return self._t[self.CONTENT].count_rows()
+
+    def _by_id(self, t) -> bool:
+        """True for tables holding one row per id (content, rejects)."""
+        return t.partition_spec.columns == [self.ID_COL]
+
+    def _ids_in(self, spark, t, lo, hi, buckets=None) -> DataFrame:
+        """``ID_COL`` values of ``t`` within ``[lo, hi]``, distinct —
+        sketch tables hold several rows per id. An anti-join on the id
+        is an equality, so rows in other storage buckets / outside the
+        span can never match: both prunings are always safe."""
+        i = self.ID_COL
+        ids = t.read(spark, buckets=buckets).select(i).filter(
+            (F.col(i) >= lo) & (F.col(i) <= hi)
+        )
+        return ids if self._by_id(t) else ids.distinct()
+
+    def _add_batch(
+        self, spark: SparkSession, batch: DataFrame, value_col: str,
+        id_col: str, require_monotonic: bool,
+    ) -> DataFrame:
+        """Dedup ``batch`` against the standing corpus + itself; persist
+        its sketch rows, content and verdicts; return the KEPT new rows
+        (original columns). Re-submitting already-committed ids is a
+        no-op for them (story semantics). See the module docstring for
+        the per-batch cost contract and how each scan is pruned."""
+        i, wm = self.ID_COL, f"max_{self.ID_COL}"
+        for t in self._t.values():
+            t.refresh()
+        done, content = self._t[self.DONE], self._t[self.CONTENT]
+        # every table but the done marker, in append order
+        priors = [
+            r for r in (self.CONTENT, *self._sketches, "rejects") if r != self.DONE
+        ]
+        first = self._t[priors[0]]
+        stats = self.last_batch_stats = {"heal": False}
+        have_done = done.count_rows() > 0  # manifest stats, no scan
+        hi_done, modern = _watermark(done, wm)
+        if modern:
+            _, modern = _watermark(first, wm)
+        if have_done and hi_done is None:
+            # rows exist but no stamped append snapshot is visible —
+            # expire_snapshots dropped them all. The fast path would
+            # skip the story filter and re-ingest replayed ids; fall
+            # back to the true membership anti-join instead.
+            modern = False
+        fast = modern and require_monotonic
+
+        iid = F.col(id_col).cast("bigint")
+        row = batch.agg(F.min(iid).alias("lo"), F.max(iid).alias("hi")).collect()[0]
+        lo_raw, hi_raw = row["lo"], row["hi"]
+        if lo_raw is None:  # empty input
+            stats["story_path"] = "empty"
+            return batch
+
+        d = batch
+        tails = _pending_tails(first, done, wm) if modern else []
+        reproc = _reprocess_cond(tails, iid)
+        anti_span = None
+        if have_done and fast:
+            stats["story_path"] = "watermark"
+            if hi_done is not None and lo_raw <= hi_done:
+                # replay (ids already committed), a crashed tail being
+                # replayed (ids committed to the first table but never
+                # judged — their batch token never reached the done
+                # table), or a monotonicity violation (ids never seen).
+                # The membership probe tests the content table (bucketed
+                # by id, prunable) while the done marker may be another
+                # table, so ids inside a pending tail's range can pass
+                # the probe despite being un-judged — they are carved
+                # out as reprocessable BEFORE the probe and kept in ``d``.
+                committed = iid <= hi_done
+                if reproc is not None:
+                    committed = committed & ~reproc
+                old_ids = d.filter(committed).select(iid.alias(i))
+                db = _storage_buckets(old_ids, content)
+                if db:
+                    present = content.read(spark, buckets=db).select(i)
+                    # prune_dropped reclaims dropped items' content rows
+                    # but KEEPS their verdict rows — a replayed batch
+                    # containing pruned ids must still read as
+                    # committed, so the probe accepts ids from either
+                    # table (both bucketed by id)
+                    if self.rejects.count_rows() > 0:
+                        rb = _storage_buckets(old_ids, self.rejects)
+                        present = present.unionByName(
+                            self.rejects.read(spark, buckets=rb).select(i)
+                        )
+                    if old_ids.join(present, i, "left_anti").limit(1).collect():
+                        raise _not_monotonic(lo_raw, hi_done)
+                keep = iid > hi_done
+                if reproc is not None:
+                    keep = keep | reproc
+                d = d.filter(keep)
+            if (
+                hi_done is not None
+                and hi_raw <= hi_done
+                and not _overlapping(tails, lo_raw, hi_raw)
+            ):
+                # full replay of committed batches, no crashed tail in
+                # range — story no-op (d is already filtered empty)
+                stats["story_path"] = "watermark-replay-noop"
+                return d
+        elif have_done:
+            # legacy / non-monotonic path: true membership anti-join
+            # against the done table, range-pruned to the batch's id
+            # span (still a scan of its id column, see module docstring)
+            stats["story_path"] = "anti-join"
+            stored_ids = self._ids_in(spark, done, lo_raw, hi_raw)
+            d = d.withColumn("_iid", iid).join(
+                stored_ids.withColumnRenamed(i, "_iid"), "_iid", "left_anti"
+            ).drop("_iid")
+            row = d.agg(F.min(iid).alias("lo"), F.max(iid).alias("hi")).collect()[0]
+            anti_span = (row["lo"], row["hi"])
+            if require_monotonic:
+                hi = hi_done
+                if not modern:
+                    hi = done.read(spark).agg(F.max(i)).collect()[0][0]
+                lo = anti_span[0]
+                if lo is not None and hi is not None and lo <= hi:
+                    raise _not_monotonic(lo, hi)
+        else:
+            stats["story_path"] = "first-batch"
+
+        batch_tok = uuid.uuid4().hex[:12]
+        clipped = fast and hi_done is not None and lo_raw <= hi_done
+        if anti_span is not None:
+            # exact-gap stamp: the anti-join already removed committed
+            # ids, but the SURVIVORS' hull may still straddle other
+            # batches' committed spans (an unordered batch can wrap
+            # around them) — subtract the done table's committed ranges
+            # so a crash here never leaves a tail claiming them
+            eff = (
+                []
+                if anti_span[0] is None
+                else _subtract_ranges(
+                    anti_span[0], anti_span[1], _committed_ranges(done, wm)
+                )
+            )
+        else:
+            eff = _effective_ranges(clipped, lo_raw, hi_raw, hi_done, tails)
+        # heal anti-joins below filter to [batch_lo, batch_hi] — must
+        # cover reprocessed tail ids, which sit below the watermark
+        batch_lo = min((r[0] for r in eff), default=lo_raw)
+        batch_hi = hi_raw
+        stamp = {"op": "add_batch", "batch": batch_tok, wm: int(batch_hi), "id_ranges": eff}
+        healed = _healed_tokens(tails, int(lo_raw), int(hi_raw))
+        if healed:
+            # The heals stamp is a metadata CLAIM derived from input
+            # SPAN coverage. Verify it against rows before trusting it:
+            # the crashed batch's ids are durable in the first table
+            # (its append succeeded), so any of them missing from this
+            # input means the whole-batch replay contract was violated
+            # — stamping the heal would permanently mark un-judged ids
+            # as committed (silent under-dedup, ADVICE r7 #2). Drop
+            # ALL heal claims in that case: the tails stay pending
+            # (still reprocessable — safe) and a conforming replay
+            # heals them later. Runs only on the rare crash-replay path.
+            claim_tails = [t for t in tails if t["batch"] in set(healed)]
+            claim_cond = _reprocess_cond(claim_tails, F.col(i))
+            if claim_cond is not None:
+                stored_tail_ids = first.read(spark).select(i).filter(claim_cond)
+                missing = stored_tail_ids.join(
+                    batch.select(iid.alias(i)), i, "left_anti"
+                ).limit(1).collect()
+                if missing:
+                    stats["heal_claims_dropped"] = list(healed)
+                    healed = []
+        if healed:
+            stats["healed_tails"] = list(healed)
+
+        # a table of a crashed tail holds rows this batch recomputes;
+        # the legacy gate keys on the table being healed itself (an
+        # unstamped store whose first batch crashed has an empty done
+        # table but populated earlier tables, ADVICE r6 #2)
+        heal = {
+            r: bool(_pending_tails(self._t[r], done, wm))
+            if modern
+            else self._t[r].count_rows() > 0
+            for r in priors
+        }
+        heal[self.DONE] = False  # appended last: never half-committed
+        sketches = self._sketch(d, value_col, id_col)
+        new_ids = sketches[0][1].select(i).distinct()
+        key_buckets: dict = {}
+        pairs = reduce(DataFrame.unionByName, [
+            self._candidates(spark, r, rows, new_ids, heal[r], min_shared, key_buckets)
+            for r, rows, min_shared in sketches
+        ]).distinct().persist()
+
+        # verify on the values of exactly the ids the pairs touch; old
+        # values come from a read pruned to the touched ids' storage
+        # buckets (pairs is persisted — the candidate join runs once,
+        # here, for the bucket collection)
+        new_vals = d.select(
+            iid.alias(i), F.col(value_col).cast(self.VALUE_TYPE).alias(self.VALUE_COL)
+        )
+        touched = (
+            pairs.select(F.col("a_id").alias(i))
+            .unionByName(pairs.select(F.col("b_id").alias(i)))
+            .distinct()
+        )
+        old_touched = touched.join(new_ids, i, "left_anti")
+        # an empty content table holds no old values: skip the job
+        tb = _storage_buckets(old_touched, content) if content.count_rows() else []
+        vals = new_vals
+        if tb:
+            vals = content.read(spark, buckets=tb).join(
+                old_touched, i, "left_semi"
+            ).unionByName(new_vals)
+        verified = self._verify(vals.join(touched, i, "left_semi"), pairs)
+        # verdict rows: each dropped id with the smallest lower id it
+        # verified against (deterministic representative)
+        reject_rows = verified.groupBy(F.col("b_id").alias(i)).agg(
+            F.min("a_id").alias("dup_of")
+        )
+
+        # persist AFTER computing, the done table LAST: its commit is
+        # the batch's done marker (the story filter keys on it), so a
+        # crash before it means the whole batch reprocesses — and the
+        # heal anti-join de-duplicates the crashed tail's partial
+        # commits. It runs ONLY when snapshot metadata shows a crashed
+        # tail (a batch token that never reached the done table).
+        add = {self.CONTENT: new_vals, "rejects": reject_rows}
+        add.update((r, rows) for r, rows, _ in sketches)
+        rej_buckets: set = set()
+        for r in (*priors, self.DONE):
+            t, rows = self._t[r], add[r]
+            before = {f["path"] for f in t.current_files()}
+            if heal[r]:
+                stats["heal"] = True
+                if self._by_id(t):
+                    hb = _storage_buckets(new_ids, t)
+                    if r == "rejects":
+                        rej_buckets.update(hb)
+                else:
+                    # bucketed by a content key, not the id — but a
+                    # replayed crashed batch re-sketches the SAME
+                    # values, so any existing row with an id in the
+                    # batch range carries a key from this batch's own
+                    # key set: prune the heal read to those keys'
+                    # storage buckets, which the candidate join already
+                    # collected (none: the table holds no rows yet)
+                    hb = key_buckets.get(r, [])
+                    files, hset = t.current_files(), set(hb)
+                    pre = "" if r == self.CFG_TABLE else f"{r}_"
+                    stats[pre + "heal_files_total"] = len(files)
+                    stats[pre + "heal_files_read"] = sum(
+                        1 for f in files if f["bucket"] in hset
+                    )
+                rows = rows.join(
+                    self._ids_in(spark, t, batch_lo, batch_hi, hb), i, "left_anti"
+                )
+            st = {**stamp, **(self.cfg if r == self.CFG_TABLE else {})}
+            if r == self.DONE and healed:
+                # a replay that covered crashed tails declares them
+                # healed here, under ITS token — _pending_tails resolves
+                # tails by token only, never by the watermark having
+                # moved past them
+                st["heals"] = list(healed)
+            snap = t.append(rows, st)
+            if r == "rejects":
+                rej_buckets.update(
+                    f["bucket"] for f in snap["files"] if f["path"] not in before
+                )
+        for _, rows, _ in sketches:
+            rows.unpersist()
+        pairs.unpersist()
+        # the kept rows are the batch minus its committed verdicts — a
+        # read of the verdict buckets this batch just wrote (plus, on a
+        # heal, every bucket of its ids: a crashed tail's verdicts stand)
+        # instead of a plan over the unpersisted sketches and pairs,
+        # which every action on the result would re-run from scratch
+        if not rej_buckets:
+            return d
+        dropped = self.rejects.read(spark, buckets=rej_buckets).select(
+            F.col(i).alias("_drop")
+        ).filter(F.col("_drop").between(lo_raw, hi_raw))
+        return d.join(dropped, iid == F.col("_drop"), "left_anti")
+
+    def _candidates(
+        self, spark, role, rows, new_ids, heal, min_shared, key_buckets
+    ) -> DataFrame:
+        """Candidate ``(a_id, b_id)`` pairs from one sketch table: its
+        stored rows in the buckets this batch touches plus the batch's
+        own ``rows``, capped, self-joined on the key columns, kept only
+        where the higher id is new (old x old pairs were judged in
+        earlier batches). With ``min_shared`` a pair needs that many
+        common keys (winnowed fingerprints)."""
+        i, t = self.ID_COL, self._t[role]
+        keys = [c for c in rows.columns if c != i]
+        if t.count_rows() > 0:  # manifest stats, no scan
+            # touched-bucket pruning: manifest-prune the scan to the
+            # storage buckets the new keys hash to, then broadcast the
+            # key set and left-semi filter map-side — the stored side
+            # is never shuffled, and the cap window + pair join below
+            # see only touched buckets' rows (whole buckets, so the
+            # cap's per-bucket counts stay exact).
+            new_keys = rows.select(*keys).distinct()
+            sb = key_buckets[role] = _storage_buckets(new_keys, t)
+            stored = t.read(spark, buckets=sb).join(
+                F.broadcast(new_keys), keys, "left_semi"
+            )
+            if role == self.CFG_TABLE:
+                files, sbset = t.current_files(), set(sb)
+                self.last_batch_stats.update(
+                    index_files_total=len(files),
+                    index_files_read=sum(1 for f in files if f["bucket"] in sbset),
+                    index_buckets_total=len({f["bucket"] for f in files}),
+                    index_buckets_read=len(sb),
+                    stored_semi_plan=_plan_string(stored),
+                )
+            if heal:
+                # healing replay: a crashed tail's rows are committed
+                # here AND recomputed in ``rows`` — drop the stored
+                # copies so the per-bucket cap and the min_shared count
+                # see each row once (double-counting can push a bucket
+                # over max_bucket and diverge from the clean run)
+                stored = stored.join(F.broadcast(new_ids), i, "left_anti")
+            rows = stored.unionByName(rows)
+        capped = _cap_buckets(rows, keys, self.max_bucket)
+        a, b = capped.alias("a"), capped.alias("b")
+        cond = reduce(
+            lambda x, y: x & y,
+            [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+            + [F.col(f"a.{i}") < F.col(f"b.{i}")],
+        )
+        a_id, b_id = F.col(f"a.{i}").alias("a_id"), F.col(f"b.{i}").alias("b_id")
+        pairs = a.join(b, cond)
+        if min_shared is None:
+            pairs = pairs.select(a_id, b_id)
+        else:
+            pairs = (
+                pairs.groupBy(a_id, b_id)
+                .agg(F.count(F.lit(1)).alias("_shared"))
+                .filter(F.col("_shared") >= min_shared)
+                .select("a_id", "b_id")
+            )
+        return pairs.join(new_ids.withColumnRenamed(i, "b_id"), "b_id", "left_semi")
+
+    def rejected_of(
+        self, spark: SparkSession, ids: DataFrame, id_col: str | None = None
+    ) -> DataFrame:
+        """(id, dup_of) for the subset of ``ids`` (column ``id_col``,
+        default the store's ``ID_COL``) the store has dropped — a
+        bucket-pruned read of the persisted verdicts, valid for any mix
+        of new and previously-ingested ids. This is how a replayed CDC
+        epoch recovers its kept set without re-judging: verdicts commit
+        BEFORE the done marker, so any id the story filter skips
+        already has its verdict durable. Batches ingested by a store
+        that predates the verdicts table return no rows — re-ingest or
+        treat those epochs as all-kept."""
+        i = self.ID_COL
+        self.rejects.refresh()
+        idf = ids.select(F.col(id_col or i).cast("bigint").alias(i)).distinct()
+        if self.rejects.count_rows() == 0:  # manifest stats, no scan
+            return idf.limit(0).withColumn("dup_of", F.lit(None).cast("bigint"))
+        rb = _storage_buckets(idf, self.rejects)
+        return self.rejects.read(spark, buckets=rb).join(idf, i, "left_semi")
+
+    # -- maintenance -------------------------------------------------
+    def _tables(self):
+        return dict(self._t)
+
+    def compact(self, spark: SparkSession) -> dict:
+        """Small-file compaction across the store's tables: every
+        ``add_batch`` appends a file per touched bucket, and both the
+        candidate join and the bucket-pruned verdict/heal reads pay
+        per-file overhead — fold periodically (bucket-local binpack;
+        compaction snapshots are transparent to the watermark story
+        filter). Returns files before/after per table."""
+        out = {}
+        for name, t in self._t.items():
+            t.refresh()
+            before = len(t.current_files())
+            t.compact(spark)
+            t.refresh()
+            out[name] = {"files_before": before, "files_after": len(t.current_files())}
+        return out
+
+    def expire(self, keep_last: int = 8) -> dict:
+        """Bound snapshot metadata: an always-on ingest otherwise grows
+        every table's snapshot list O(batches) and each commit rewrites
+        it (O(batches^2) on disk over time). Keeps the newest
+        ``keep_last`` snapshots per table — the watermark/token stamps
+        of expired snapshots are no longer visible, so keep at least as
+        many as the deepest crash-replay window you need (a tail can
+        only be healed while its stamps are still in the kept list)."""
+        return {name: t.expire_snapshots(keep_last) for name, t in self._t.items()}
+
+    def remove_orphans(self, older_than_seconds: float = 3600) -> dict:
+        """Delete data files referenced by NO snapshot across the
+        store's tables — a crashed add_batch (between writing files and
+        committing) leaves its files behind forever otherwise. Same
+        mtime grace period as the lake tables' own
+        ``remove_orphan_files``; files deleted per table returned."""
+        return {
+            name: t.remove_orphan_files(older_than_seconds)
+            for name, t in self._t.items()
+        }
+
+    def _prune_dropped(self, spark: SparkSession, before: int, out_key: str) -> dict:
+        """RETENTION: reclaim the heavy state (sketch rows, content) of
+        items that were DROPPED with ``id < before``. Their verdict rows
+        are KEPT — one tiny row per dropped item — so ``rejected_of``
+        replay recovery still works at any depth.
+
+        Dropped items' sketch rows stay stored BY DESIGN (module
+        docstring: the one-shot pair set includes pairs whose lower id
+        was itself dropped), so pruning trades storage for a bounded,
+        one-sided equality change: a future item whose ONLY verified
+        match is a pruned dropped item will now be KEPT (the one-shot
+        run over the full history would have dropped it). Kept items
+        are untouched — pairs against them are unaffected. Choose
+        ``before`` older than any content you expect to recur.
+        """
+        i, before = self.ID_COL, int(before)
+        self.rejects.refresh()
+        old = self.rejects.read(spark).filter(F.col(i) < before).select(i).persist()
+        stamp = {"maintenance": "prune_dropped", f"before_{i}": before}
+        out = {out_key: old.count()}
+        try:
+            if out[out_key] == 0:
+                return out
+            for name, t in self._t.items():
+                if name == "rejects":
+                    continue
+                t.refresh()
+                # the content table (bucketed by id) rewrites only the
+                # dropped ids' buckets; sketch tables bucket by content
+                # keys — a dropped item's rows spread across buckets,
+                # so those rewrites touch every bucket holding any such
+                # row (heavyweight, like compaction — a periodic job,
+                # never per-batch)
+                if self._by_id(t):
+                    bks = _storage_buckets(old, t)
+                    keep = t.read(spark, buckets=bks).join(old, i, "left_anti")
+                    t.overwrite_buckets(keep, bks, dict(stamp))
+                else:
+                    keep = t.read(spark).join(old, i, "left_anti")
+                    t.overwrite_all(keep, dict(stamp))
+            return out
+        finally:
+            old.unpersist()
+
+
+class DedupStore(_DedupCore):
     """Persisted MinHash LSH index + document texts in a lake
     warehouse. One store per (num_hashes, bands, shingle_words,
     hash_fn, threshold) configuration — the parameters are fixed at
-    creation and written into the index table's first snapshot summary
+    creation and written into the index table's snapshot summaries
     so a mismatched reopen fails loudly instead of silently mixing
     incompatible signatures.
 
     ``num_buckets`` sizes the storage bucketing that manifest pruning
-    keys on; at corpus scale it should be large enough that one
-    batch's band keys touch a small fraction of buckets (thousands on
-    a real cluster — default 64 here). Reopening an existing store
-    keeps the table's own stored spec.
+    keys on (thousands on a real cluster — default 64 here).
 
-    After each ``add_batch`` call, ``last_batch_stats`` holds the
-    pruning evidence for that batch: which story path ran, how many
-    index files the candidate join read vs the table total, the
-    physical plan of the stored-side semi filter, and whether a heal
-    scan was needed.
+    ``winnow`` adds an optional second candidate generator: winnowed
+    (MOSS) fingerprints catch shared boilerplate SPANS that global
+    Jaccard banding misses — complementary, same capped-equi-join
+    scale shape. Its index persists beside the MinHash one.
     """
+
+    ID_COL, VALUE_COL, VALUE_TYPE, EVENT_COL = "doc_id", "text", "string", "content"
+    PREFIX, CONTENT, DONE = "_dedup_", "docs", "index"
+    CFG_TABLE, CFG_MARK, KIND = "index", "num_hashes", "dedup store"
 
     def __init__(
         self,
@@ -436,90 +1007,12 @@ class DedupStore:
             },
         }
         self.max_bucket = max_bucket
-        self.last_batch_stats: dict = {}
-        cat = LakeCatalog(warehouse)
-        self.index = cat.create_table(
-            "_dedup_index",
-            parse_ddl("doc_id bigint, band_id int, band_hash string"),
-            PartitionSpec.bucket(num_buckets, "band_hash"),
-            if_not_exists=True,
-        )
-        self.docs = cat.create_table(
-            "_dedup_docs",
-            parse_ddl("doc_id bigint, text string"),
-            PartitionSpec.bucket(num_buckets, "doc_id"),
-            if_not_exists=True,
-        )
-        # persisted VERDICTS: one row per dropped doc (and which lower
-        # id it duplicated). Committed between the docs and index
-        # appends, so by the time the index commit marks a batch done —
-        # the point at which the story filter starts skipping its ids —
-        # every verdict of that batch is durable, and a replayed epoch
-        # can recover its kept set via :meth:`rejected_of` instead of
-        # re-judging (the CDC pre-merge composition relies on this).
-        self.rejects = cat.create_table(
-            "_dedup_rejects",
-            parse_ddl("doc_id bigint, dup_of bigint"),
-            PartitionSpec.bucket(num_buckets, "doc_id"),
-            if_not_exists=True,
-        )
-        # optional second candidate generator: winnowed (MOSS)
-        # fingerprints catch shared boilerplate SPANS that global
-        # Jaccard banding misses — complementary, same capped-equi-join
-        # scale shape. Its index persists beside the MinHash one.
-        self.winnow_index = None
-        if self.cfg["winnow"] is not None:
-            self.winnow_index = cat.create_table(
-                "_dedup_winnow",
-                parse_ddl("doc_id bigint, h bigint"),
-                PartitionSpec.bucket(num_buckets, "h"),
-                if_not_exists=True,
-            )
-        for snap in self.index.meta["snapshots"]:
-            summ = snap.get("summary", {})
-            if "num_hashes" not in summ:
-                continue  # creation / unrelated snapshot
-            mismatch = {
-                k: (summ.get(k), self.cfg[k])
-                for k in self.cfg
-                if summ.get(k) != self.cfg[k]
-            }
-            if mismatch:
-                raise ValueError(
-                    f"DedupStore config mismatch vs existing index: {mismatch}"
-                )
-            break
-
-    @classmethod
-    def open(cls, warehouse: str) -> "DedupStore":
-        """Reopen an existing store under its OWN stored configuration
-        (every index append stamps the full cfg into its snapshot
-        summary) — maintenance jobs (compact/expire/prune) shouldn't
-        have to repeat ingest parameters they can get wrong. Raises if
-        the warehouse has no ingested dedup index to read a spec from."""
-        cat = LakeCatalog(warehouse)
-        if not cat.table_exists("_dedup_index"):
-            raise ValueError(f"no dedup store at {warehouse!r}")
-        for snap in cat.load_table("_dedup_index").meta["snapshots"]:
-            summ = snap.get("summary") or {}
-            if "num_hashes" in summ:
-                return cls(
-                    warehouse,
-                    num_hashes=summ["num_hashes"],
-                    bands=summ["bands"],
-                    shingle_words=summ["shingle_words"],
-                    threshold=summ["threshold"],
-                    hash_fn=summ["hash_fn"],
-                    max_bucket=summ.get("max_bucket"),
-                    winnow=summ.get("winnow"),
-                )
-        raise ValueError(
-            f"dedup store at {warehouse!r} has no ingested batch to read "
-            "its configuration from — pass the parameters explicitly"
-        )
-
-    def corpus_size(self) -> int:
-        return self.docs.count_rows()
+        sketches = {"index": "band_id int, band_hash string"}
+        if winnow is not None:
+            sketches["winnow"] = "h bigint"
+        self._open(warehouse, num_buckets, sketches)
+        self.index, self.docs = self._t["index"], self._t["docs"]
+        self.winnow_index = self._t.get("winnow")
 
     def add_batch(
         self,
@@ -531,527 +1024,53 @@ class DedupStore:
     ) -> DataFrame:
         """Dedup ``docs`` against the standing corpus + themselves;
         persist their signatures; return the KEPT new docs (original
-        columns). Re-submitting already-indexed ids is a no-op for
-        them (story semantics). See the module docstring for the
-        per-batch cost contract and how each scan is pruned."""
-        self.index.refresh()
-        self.docs.refresh()
-        self.rejects.refresh()
-        if self.winnow_index is not None:
-            self.winnow_index.refresh()
-        stats = self.last_batch_stats = {"heal": False}
-        have_index = self.index.count_rows() > 0  # manifest stats, no scan
-        hi_index, modern = _watermark(self.index, "max_doc_id")
-        if modern:
-            _, modern = _watermark(self.docs, "max_doc_id")
-        if have_index and hi_index is None:
-            # rows exist but no stamped append snapshot is visible —
-            # expire_snapshots dropped them all. The fast path would
-            # skip the story filter and re-ingest replayed ids; fall
-            # back to the true membership anti-join instead.
-            modern = False
-        fast = modern and require_monotonic
+        columns). See :meth:`_DedupCore._add_batch`."""
+        return self._add_batch(spark, docs, text_col, id_col, require_monotonic)
 
-        did = F.col(id_col).cast("bigint")
-        row = docs.agg(F.min(did).alias("lo"), F.max(did).alias("hi")).collect()[0]
-        lo_raw, hi_raw = row["lo"], row["hi"]
-        if lo_raw is None:  # empty input
-            stats["story_path"] = "empty"
-            return docs
+    def prune_dropped(self, spark: SparkSession, before_doc_id: int) -> dict:
+        """Reclaim band rows, texts and fingerprints of docs dropped
+        with ``doc_id < before_doc_id``; see
+        :meth:`_DedupCore._prune_dropped` for the documented trade."""
+        return self._prune_dropped(spark, before_doc_id, "pruned_docs")
 
-        d = docs
-        tails = _pending_tails(self.docs, self.index, "max_doc_id") if modern else []
-        reproc = _reprocess_cond(tails, did)
-        if have_index and fast:
-            stats["story_path"] = "watermark"
-            if hi_index is not None and lo_raw <= hi_index:
-                # replay (ids already committed), a crashed tail being
-                # replayed (ids committed to DOCS but never judged —
-                # their batch token never reached the index), or a
-                # monotonicity violation (ids never seen). The
-                # membership probe tests the docs table (bucketed by
-                # doc_id, prunable) while the done marker is the INDEX
-                # commit, so ids inside a pending tail's range pass the
-                # probe despite being un-judged — they are carved out
-                # as reprocessable BEFORE the probe and kept in ``d``.
-                committed = did <= hi_index
-                if reproc is not None:
-                    committed = committed & ~reproc
-                old_ids = d.filter(committed).select(did.alias("doc_id"))
-                db = _storage_buckets(old_ids, self.docs)
-                if db:
-                    present = self.docs.read(spark, buckets=db).select("doc_id")
-                    # prune_dropped reclaims dropped docs' rows from the
-                    # docs table but KEEPS their verdict rows — a
-                    # replayed batch containing pruned ids must still
-                    # read as committed, so the probe accepts ids from
-                    # either table (both bucketed by doc_id)
-                    if self.rejects.count_rows() > 0:
-                        rb = _storage_buckets(old_ids, self.rejects)
-                        present = present.unionByName(
-                            self.rejects.read(spark, buckets=rb).select("doc_id")
-                        )
-                    missing = (
-                        old_ids.join(present, "doc_id", "left_anti").limit(1).collect()
-                    )
-                    if missing:
-                        raise ValueError(
-                            f"add_batch: new ids must exceed all stored ids for the "
-                            f"batch==incremental equality contract (new min {lo_raw} "
-                            f"<= stored max {hi_index}); pass "
-                            "require_monotonic=False to override"
-                        )
-                keep = did > hi_index
-                if reproc is not None:
-                    keep = keep | reproc
-                d = d.filter(keep)
-            if (
-                hi_index is not None
-                and hi_raw <= hi_index
-                and not _overlapping(tails, lo_raw, hi_raw)
-            ):
-                # full replay of committed batches, no crashed tail in
-                # range — story no-op (d is already filtered empty)
-                stats["story_path"] = "watermark-replay-noop"
-                return d
-        anti_span = None
-        if have_index and not fast:
-            # legacy / non-monotonic path: true membership anti-join,
-            # range-pruned to the batch's id span (equality join — ids
-            # outside [lo, hi] can't match; still a scan of the index
-            # id column, see module docstring)
-            stats["story_path"] = "anti-join"
-            indexed_ids = (
-                self.index.read(spark)
-                .select(F.col("doc_id"))
-                .filter((F.col("doc_id") >= lo_raw) & (F.col("doc_id") <= hi_raw))
-                .distinct()
-                .withColumnRenamed("doc_id", "_did")
-            )
-            d = d.withColumn("_did", did).join(indexed_ids, "_did", "left_anti").drop("_did")
-            row = d.agg(F.min(did).alias("lo"), F.max(did).alias("hi")).collect()[0]
-            anti_span = (row["lo"], row["hi"])
-            if require_monotonic:
-                hi = hi_index
-                if not modern:
-                    hi = self.index.read(spark).agg(F.max("doc_id")).collect()[0][0]
-                lo = anti_span[0]
-                if lo is not None and hi is not None and lo <= hi:
-                    raise ValueError(
-                        f"add_batch: new ids must exceed all stored ids for the "
-                        f"batch==incremental equality contract (new min {lo} <= "
-                        f"stored max {hi}); pass require_monotonic=False to "
-                        "override"
-                    )
-        elif not have_index:
-            stats["story_path"] = "first-batch"
+    def _sketch(self, d: DataFrame, text_col: str, id_col: str) -> list:
+        from getl_spark.functions.text import winnow as _winnow
 
-        batch_tok = uuid.uuid4().hex[:12]
-        clipped = fast and hi_index is not None and lo_raw <= hi_index
-        if anti_span is not None:
-            # exact-gap stamp: the anti-join already removed committed
-            # ids, but the SURVIVORS' hull may still straddle other
-            # batches' committed spans (an unordered batch can wrap
-            # around them) — subtract the done table's committed ranges
-            # so a crash here never leaves a tail claiming them
-            eff = (
-                []
-                if anti_span[0] is None
-                else _subtract_ranges(
-                    anti_span[0], anti_span[1],
-                    _committed_ranges(self.index, "max_doc_id"),
-                )
-            )
-        else:
-            eff = _effective_ranges(clipped, lo_raw, hi_raw, hi_index, tails)
-        # heal anti-joins below filter to [batch_lo, batch_hi] — must
-        # cover reprocessed tail ids, which sit below the watermark
-        batch_lo = min((r[0] for r in eff), default=lo_raw)
-        batch_hi = hi_raw
-        stamp = {
-            "op": "add_batch", "batch": batch_tok,
-            "max_doc_id": int(batch_hi), "id_ranges": eff,
-        }
-        healed = _healed_tokens(tails, int(lo_raw), int(hi_raw))
-        if healed:
-            # The heals stamp is a metadata CLAIM derived from input
-            # SPAN coverage. Verify it against rows before trusting it:
-            # the crashed batch's ids are durable in the docs table
-            # (its append succeeded), so any of them missing from this
-            # input means the whole-batch replay contract was violated
-            # — stamping the heal would permanently mark un-judged ids
-            # as committed (silent under-dedup, ADVICE r7 #2). Drop
-            # ALL heal claims in that case: the tails stay pending
-            # (still reprocessable — safe) and a conforming replay
-            # heals them later. Runs only on the rare crash-replay path.
-            claim_tails = [t for t in tails if t["batch"] in set(healed)]
-            claim_cond = _reprocess_cond(claim_tails, F.col("doc_id"))
-            if claim_cond is not None:
-                stored_tail_ids = (
-                    self.docs.read(spark).select("doc_id").filter(claim_cond)
-                )
-                missing = stored_tail_ids.join(
-                    docs.select(did.alias("doc_id")), "doc_id", "left_anti"
-                ).limit(1).collect()
-                if missing:
-                    stats["heal_claims_dropped"] = list(healed)
-                    healed = []
-        if healed:
-            stats["healed_tails"] = list(healed)
-
-        new_banded = minhash_banded_rows(
+        c, did = self.cfg, F.col(id_col).cast("bigint").alias("doc_id")
+        out = [("index", minhash_banded_rows(
             d, text_col, id_col,
-            self.cfg["num_hashes"], self.cfg["bands"],
-            self.cfg["shingle_words"], self.cfg["hash_fn"],
-        ).select(did.alias("doc_id"), "band_id", "band_hash").persist()
-        new_ids = new_banded.select("doc_id").distinct()
+            c["num_hashes"], c["bands"], c["shingle_words"], c["hash_fn"],
+        ).select(did, "band_id", "band_hash").persist(), None)]
+        if c["winnow"] is not None:
+            wc = c["winnow"]
+            fp = _winnow(d, text_col, id_col, k=wc["k"], w=wc["w"], hash_fn=c["hash_fn"])
+            out.append(("winnow", fp.select(did, "h").distinct().persist(), wc["min_shared"]))
+        return out
 
-        if have_index:
-            # touched-bucket pruning: manifest-prune the scan to the
-            # storage buckets the new band keys hash to, then broadcast
-            # the key set and left-semi filter map-side — the stored
-            # side is never shuffled, and the cap window + pair join
-            # below see only touched buckets' rows (whole buckets, so
-            # the cap's per-bucket counts stay exact).
-            new_keys = new_banded.select("band_id", "band_hash").distinct()
-            sb = _storage_buckets(new_keys, self.index)
-            files = self.index.current_files()
-            sbset = set(sb)
-            stats.update(
-                index_files_total=len(files),
-                index_files_read=sum(1 for f in files if f["bucket"] in sbset),
-                index_buckets_total=len({f["bucket"] for f in files}),
-                index_buckets_read=len(sb),
-            )
-            stored_touched = self.index.read(spark, buckets=sb).join(
-                F.broadcast(new_keys), ["band_id", "band_hash"], "left_semi"
-            )
-            stats["stored_semi_plan"] = _plan_string(stored_touched)
-            all_banded = stored_touched.unionByName(new_banded)
-        else:
-            all_banded = new_banded
-        capped = _cap_buckets(all_banded, ["band_id", "band_hash"], self.max_bucket)
-        a, b = capped.alias("a"), capped.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-            # only pairs whose HIGHER id is new can drop anything new;
-            # old x old pairs were judged in earlier batches
-            .join(new_ids.withColumnRenamed("doc_id", "b_id"), "b_id", "left_semi")
-            .distinct()
-        )
-
-        new_fp = None
-        if self.winnow_index is not None:
-            from getl_spark.functions.text import winnow as _winnow
-
-            wc = self.cfg["winnow"]
-            new_fp = (
-                _winnow(d, text_col, id_col, k=wc["k"], w=wc["w"],
-                        hash_fn=self.cfg["hash_fn"])
-                .select(did.alias("doc_id"), "h")
-                .distinct()
-                .persist()
-            )
-            have_fp = self.winnow_index.count_rows() > 0
-            wheal = (
-                bool(_pending_tails(self.winnow_index, self.index, "max_doc_id"))
-                if modern
-                else have_fp
-            )
-            if have_fp:
-                fp_keys = new_fp.select("h").distinct()
-                sbw = _storage_buckets(fp_keys, self.winnow_index)
-                stored_fp = self.winnow_index.read(spark, buckets=sbw).join(
-                    F.broadcast(fp_keys), ["h"], "left_semi"
-                )
-                if wheal:
-                    # healing replay: the tail's winnow rows are
-                    # committed here AND recomputed in new_fp — drop
-                    # the stored copies so the per-bucket cap and the
-                    # _shared >= min_shared gate count each (doc, h)
-                    # row once, matching the clean run
-                    stored_fp = stored_fp.join(
-                        F.broadcast(new_ids), "doc_id", "left_anti"
-                    )
-                all_fp = stored_fp.unionByName(new_fp)
-            else:
-                all_fp = new_fp
-            all_fp = _cap_buckets(all_fp, ["h"], self.max_bucket)
-            fa, fb = all_fp.alias("a"), all_fp.alias("b")
-            wpairs = (
-                fa.join(
-                    fb,
-                    (F.col("a.h") == F.col("b.h"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .groupBy(
-                    F.col("a.doc_id").alias("a_id"),
-                    F.col("b.doc_id").alias("b_id"),
-                )
-                .agg(F.count(F.lit(1)).alias("_shared"))
-                .filter(F.col("_shared") >= wc["min_shared"])
-                .select("a_id", "b_id")
-                .join(new_ids.withColumnRenamed("doc_id", "b_id"), "b_id", "left_semi")
-            )
-            pairs = pairs.unionByName(wpairs).distinct()
-
-        # verify on texts of exactly the docs the pairs touch; old
-        # docs' texts come from a read pruned to the touched ids'
-        # storage buckets (pairs is persisted — the candidate join
-        # runs once, here, for the bucket collection)
-        pairs = pairs.persist()
-        new_texts = d.select(did.alias("doc_id"), F.col(text_col).alias("text"))
-        touched = (
-            pairs.select(F.col("a_id").alias("doc_id"))
-            .unionByName(pairs.select(F.col("b_id").alias("doc_id")))
-            .distinct()
-        )
-        old_touched = touched.join(new_ids, "doc_id", "left_anti")
-        tb = _storage_buckets(old_touched, self.docs)
-        if tb:
-            old_texts = self.docs.read(spark, buckets=tb).join(
-                old_touched, "doc_id", "left_semi"
-            )
-            texts = old_texts.unionByName(new_texts)
-        else:
-            texts = new_texts
-        texts = texts.join(touched, "doc_id", "left_semi")
-        verified = jaccard_verify(
+    def _verify(self, texts: DataFrame, pairs: DataFrame) -> DataFrame:
+        return jaccard_verify(
             texts, pairs, "text", "doc_id", self.cfg["shingle_words"],
             self.cfg["threshold"],
         )
-        dropped = verified.select(F.col("b_id").alias("_drop")).distinct()
-        kept = d.join(dropped, did == F.col("_drop"), "left_anti")
-        # verdict rows: each dropped doc with the smallest lower id it
-        # verified against (deterministic representative)
-        reject_rows = verified.groupBy(F.col("b_id").alias("doc_id")).agg(
-            F.min("a_id").alias("dup_of")
-        )
-
-        # persist AFTER computing, DOCS FIRST then INDEX: the index commit
-        # is the batch's "done" marker (the story filter keys on it), so
-        # a crash before it means the whole batch reprocesses — and the
-        # heal anti-join below de-duplicates a partial docs-only commit.
-        # The heal runs ONLY when snapshot metadata shows a crashed tail
-        # (a docs/winnow batch token that never reached the index).
-        texts_to_add = new_texts
-        # legacy fallback keys on the DOCS table (the one being healed):
-        # an unstamped store whose first batch crashed after the docs
-        # append has an empty index but populated docs — gating on
-        # have_index would re-append those texts (ADVICE r6 #2)
-        heal = bool(tails) if modern else self.docs.count_rows() > 0
-        if heal:
-            stats["heal"] = True
-            # bucket + range pruning are both safe here regardless of
-            # path: the anti-join is an equality on doc_id, so rows in
-            # other storage buckets / outside the batch's id span can
-            # never match
-            hb = _storage_buckets(new_ids, self.docs)
-            already = (
-                self.docs.read(spark, buckets=hb)
-                .select("doc_id")
-                .filter((F.col("doc_id") >= batch_lo) & (F.col("doc_id") <= batch_hi))
-            )
-            texts_to_add = new_texts.join(already, "doc_id", "left_anti")
-        self.docs.append(texts_to_add, dict(stamp))
-        if new_fp is not None:
-            fp_to_add = new_fp
-            # wheal computed once above, where the candidate join
-            # de-duplicated the stored side with the same condition
-            if wheal:
-                # the winnow table buckets by h (content key), not
-                # doc_id — but a replayed crashed batch re-fingerprints
-                # the SAME texts, so any existing row with a doc_id in
-                # the batch range carries an h from this batch's own
-                # key set: prune the heal read to those keys' storage
-                # buckets (``sbw`` when the candidate path computed it)
-                wb = _storage_buckets(new_fp.select("h").distinct(), self.winnow_index)
-                wfiles = self.winnow_index.current_files()
-                wset = set(wb)
-                stats.update(
-                    winnow_heal_files_total=len(wfiles),
-                    winnow_heal_files_read=sum(1 for f in wfiles if f["bucket"] in wset),
-                )
-                already_fp = (
-                    self.winnow_index.read(spark, buckets=wb)
-                    .select("doc_id")
-                    .filter((F.col("doc_id") >= batch_lo) & (F.col("doc_id") <= batch_hi))
-                    .distinct()
-                )
-                fp_to_add = new_fp.join(already_fp, "doc_id", "left_anti")
-            self.winnow_index.append(fp_to_add, dict(stamp))
-        rej_to_add = reject_rows
-        rheal = bool(_pending_tails(self.rejects, self.index, "max_doc_id")) \
-            if modern else self.rejects.count_rows() > 0
-        if rheal:
-            rb = _storage_buckets(new_ids, self.rejects)
-            already_rej = (
-                self.rejects.read(spark, buckets=rb)
-                .select("doc_id")
-                .filter((F.col("doc_id") >= batch_lo) & (F.col("doc_id") <= batch_hi))
-            )
-            rej_to_add = reject_rows.join(already_rej, "doc_id", "left_anti")
-        self.rejects.append(rej_to_add, dict(stamp))
-        # the index commit is the done marker; a replay that covered
-        # crashed tails declares them healed here, under ITS token —
-        # _pending_tails resolves tails by token only, never by the
-        # watermark having moved past them
-        idx_stamp = {**stamp, **self.cfg}
-        if healed:
-            idx_stamp["heals"] = list(healed)
-        self.index.append(new_banded, idx_stamp)
-        new_banded.unpersist()
-        pairs.unpersist()
-        if new_fp is not None:
-            new_fp.unpersist()
-        return kept
-
-    def rejected_of(
-        self, spark: SparkSession, ids: DataFrame, id_col: str = "doc_id"
-    ) -> DataFrame:
-        """(doc_id, dup_of) for the subset of ``ids`` the store has
-        dropped — a bucket-pruned read of the persisted verdicts, valid
-        for any mix of new and previously-ingested ids. This is how a
-        replayed CDC epoch recovers its kept set without re-judging:
-        verdicts commit BEFORE the index's done marker, so any id the
-        story filter skips already has its verdict durable."""
-        self.rejects.refresh()
-        idf = ids.select(F.col(id_col).cast("bigint").alias("doc_id")).distinct()
-        if self.rejects.count_rows() == 0:  # manifest stats, no scan
-            return idf.limit(0).withColumn("dup_of", F.lit(None).cast("bigint"))
-        rb = _storage_buckets(idf, self.rejects)
-        return self.rejects.read(spark, buckets=rb).join(idf, "doc_id", "left_semi")
-
-    # -- maintenance -------------------------------------------------
-    def _tables(self):
-        out = {"index": self.index, "docs": self.docs, "rejects": self.rejects}
-        if self.winnow_index is not None:
-            out["winnow"] = self.winnow_index
-        return out
-
-    def compact(self, spark: SparkSession) -> dict:
-        """Small-file compaction across the store's tables: every
-        ``add_batch`` appends a file per touched bucket, and both the
-        candidate join and the bucket-pruned verdict/heal reads pay
-        per-file overhead — fold periodically (bucket-local binpack;
-        compaction snapshots are transparent to the watermark story
-        filter). Returns files before/after per table."""
-        out = {}
-        for name, t in self._tables().items():
-            t.refresh()
-            before = len(t.current_files())
-            t.compact(spark)
-            t.refresh()
-            out[name] = {"files_before": before, "files_after": len(t.current_files())}
-        return out
-
-    def expire(self, keep_last: int = 8) -> dict:
-        """Bound snapshot metadata: an always-on ingest otherwise grows
-        every table's snapshot list O(batches) and each commit rewrites
-        it (O(batches^2) on disk over time). Keeps the newest
-        ``keep_last`` snapshots per table — the watermark/token stamps
-        of expired snapshots are no longer visible, so keep at least as
-        many as the deepest crash-replay window you need (a tail can
-        only be healed while its stamps are still in the kept list)."""
-        return {
-            name: t.expire_snapshots(keep_last)
-            for name, t in self._tables().items()
-        }
-
-    def remove_orphans(self, older_than_seconds: float = 3600) -> dict:
-        """Delete data files referenced by NO snapshot across the
-        store's tables — a crashed add_batch (between writing files and
-        committing) leaves its files behind forever otherwise. Same
-        mtime grace period as the lake tables' own
-        ``remove_orphan_files``; files deleted per table returned."""
-        return {
-            name: t.remove_orphan_files(older_than_seconds)
-            for name, t in self._tables().items()
-        }
-
-    def prune_dropped(self, spark: SparkSession, before_doc_id: int) -> dict:
-        """RETENTION: reclaim the heavy state (band rows, texts,
-        winnow fingerprints) of docs that were DROPPED with
-        ``doc_id < before_doc_id``. Their verdict rows in
-        ``_dedup_rejects`` are KEPT — one tiny row per dropped doc —
-        so ``rejected_of`` replay recovery still works at any depth.
-
-        Dropped docs' signatures stay in the index BY DESIGN (module
-        docstring: the one-shot pair set includes pairs whose lower id
-        was itself dropped), so pruning trades storage for a bounded,
-        one-sided equality change: a future doc whose ONLY verified
-        match is a pruned dropped doc will now be KEPT (the one-shot
-        run over the full history would have dropped it). Kept docs
-        are untouched — pairs against them are unaffected. Choose
-        ``before_doc_id`` older than any content you expect to recur.
-        """
-        before = int(before_doc_id)
-        self.rejects.refresh()
-        old = (
-            self.rejects.read(spark)
-            .filter(F.col("doc_id") < before)
-            .select("doc_id")
-            .persist()
-        )
-        stamp = {"maintenance": "prune_dropped", "before_doc_id": before}
-        out = {"pruned_docs": old.count()}
-        try:
-            if out["pruned_docs"] == 0:
-                return out
-            for name, t in self._tables().items():
-                if name == "rejects":
-                    continue
-                t.refresh()
-                # docs (and nothing else) is bucketed by doc_id, so its
-                # rewrite prunes to the dropped ids' buckets; the index
-                # and winnow tables bucket by content keys — a dropped
-                # doc's rows spread across buckets, so those rewrites
-                # touch every bucket holding any such row (heavyweight,
-                # like compaction — a periodic job, never per-batch)
-                if name == "docs":
-                    bks = _storage_buckets(old, t)
-                    keep = t.read(spark, buckets=bks).join(
-                        old, "doc_id", "left_anti"
-                    )
-                    t.overwrite_buckets(keep, bks, dict(stamp))
-                else:
-                    keep = t.read(spark).join(old, "doc_id", "left_anti")
-                    t.overwrite_all(keep, dict(stamp))
-            return out
-        finally:
-            old.unpersist()
 
 
-class EmbDedupStore:
-    """Incremental EMBEDDING near-dedup — :class:`DedupStore`'s shape
-    applied to vectors: every vector's hyperplane-LSH bucket rows
-    (same integer-exact math as
-    :func:`getl_spark.functions.simsearch.embedding_near_dups`)
-    persist in a lake table beside the vectors themselves; a new batch
-    is bucketed once, joined against the standing index + itself for
-    candidates, exact-cosine verified, and appended. Per-batch cost is
-    O(new vectors + touched buckets), not O(corpus) — via the same
-    watermark story filter, broadcast-semi touched-bucket pruning, and
-    token-triggered heal as the text store (module docstring).
-
-    Same contracts as the text store: with ingest-ordered ids and
-    ``max_bucket=None`` the union of ``add_batch`` outputs equals the
-    one-shot pairwise drop over ``embedding_near_dups`` pairs; with a
-    cap the incremental run is strictly more aggressive (pairs are
-    judged before their bucket can cross the cap). The VECTORS table
-    commit is the batch's done marker (bucket index + verdicts
-    appended first, healed on replay when a crashed tail is
-    detected). Verdicts persist in ``_embdedup_rejects`` and surface
-    through :meth:`rejected_of`, so this store composes into the CDC
-    pipeline's pre-merge stage with the same replay-recovery
-    guarantees as :class:`DedupStore`.
+class EmbDedupStore(_DedupCore):
+    """Incremental EMBEDDING near-dedup: every vector's hyperplane-LSH
+    bucket rows (same integer-exact math as
+    :func:`getl_spark.functions.simsearch.embedding_near_dups`) persist
+    beside the vectors themselves, and candidate pairs are exact-cosine
+    verified. Same story filter, touched-bucket pruning, token-triggered
+    heal, verdicts and maintenance as :class:`DedupStore` (module
+    docstring); the VECTORS table commit is the done marker. Verdicts
+    persist in ``_embdedup_rejects`` and surface through
+    :meth:`rejected_of`, so this store composes into the CDC pipeline's
+    pre-merge stage with the same replay-recovery guarantees.
     """
+
+    ID_COL, VALUE_COL, VALUE_TYPE = "vec_id", "embedding", "array<double>"
+    EVENT_COL = "embedding"
+    PREFIX, CONTENT, DONE = "_embdedup_", "vectors", "vectors"
+    CFG_TABLE, CFG_MARK, KIND = "buckets", "n_bits", "embedding dedup store"
 
     def __init__(
         self,
@@ -1071,75 +1090,8 @@ class EmbDedupStore:
             "max_bucket": None if max_bucket is None else int(max_bucket),
         }
         self.max_bucket = max_bucket
-        self.last_batch_stats: dict = {}
-        cat = LakeCatalog(warehouse)
-        self.buckets = cat.create_table(
-            "_embdedup_buckets",
-            parse_ddl("vec_id bigint, tbl int, bucket bigint"),
-            PartitionSpec.bucket(num_buckets, "bucket"),
-            if_not_exists=True,
-        )
-        self.vectors = cat.create_table(
-            "_embdedup_vectors",
-            parse_ddl("vec_id bigint, embedding array<double>"),
-            PartitionSpec.bucket(num_buckets, "vec_id"),
-            if_not_exists=True,
-        )
-        # persisted VERDICTS, mirroring DedupStore._dedup_rejects: one
-        # row per dropped vector with the smallest lower id it exact-
-        # cosine-verified against. Committed BEFORE the vectors append
-        # (the done marker), so by the time the story filter starts
-        # skipping a batch's ids every verdict of that batch is durable
-        # and a replayed CDC epoch recovers its kept set via
-        # :meth:`rejected_of` instead of re-judging.
-        self.rejects = cat.create_table(
-            "_embdedup_rejects",
-            parse_ddl("vec_id bigint, dup_of bigint"),
-            PartitionSpec.bucket(num_buckets, "vec_id"),
-            if_not_exists=True,
-        )
-        for snap in self.buckets.meta["snapshots"]:
-            summ = snap.get("summary", {})
-            if "n_bits" not in summ:
-                continue
-            mismatch = {
-                k: (summ.get(k), self.cfg[k])
-                for k in self.cfg
-                if summ.get(k) != self.cfg[k]
-            }
-            if mismatch:
-                raise ValueError(
-                    f"EmbDedupStore config mismatch vs existing index: {mismatch}"
-                )
-            break
-
-    @classmethod
-    def open(cls, warehouse: str) -> "EmbDedupStore":
-        """Reopen under the store's own stored configuration (same
-        contract as :meth:`DedupStore.open` — every buckets append
-        stamps the full cfg)."""
-        cat = LakeCatalog(warehouse)
-        if not cat.table_exists("_embdedup_buckets"):
-            raise ValueError(f"no embedding dedup store at {warehouse!r}")
-        for snap in cat.load_table("_embdedup_buckets").meta["snapshots"]:
-            summ = snap.get("summary") or {}
-            if "n_bits" in summ:
-                return cls(
-                    warehouse,
-                    dim=summ["dim"],
-                    threshold=summ["threshold"],
-                    n_bits=summ["n_bits"],
-                    n_tables=summ["n_tables"],
-                    seed=summ["seed"],
-                    max_bucket=summ.get("max_bucket"),
-                )
-        raise ValueError(
-            f"embedding dedup store at {warehouse!r} has no ingested batch "
-            "to read its configuration from — pass the parameters explicitly"
-        )
-
-    def corpus_size(self) -> int:
-        return self.vectors.count_rows()
+        self._open(warehouse, num_buckets, {"buckets": "tbl int, bucket bigint"})
+        self.buckets, self.vectors = self._t["buckets"], self._t["vectors"]
 
     def add_batch(
         self,
@@ -1151,216 +1103,30 @@ class EmbDedupStore:
     ) -> DataFrame:
         """Dedup ``vectors`` against the standing corpus + themselves;
         persist their bucket rows + vectors; return the KEPT new rows
-        (original columns)."""
-        from getl_spark.functions.simsearch import _bucketed, cosine
+        (original columns). See :meth:`_DedupCore._add_batch`."""
+        return self._add_batch(spark, vectors, vec_col, id_col, require_monotonic)
 
-        self.buckets.refresh()
-        self.vectors.refresh()
-        self.rejects.refresh()
-        stats = self.last_batch_stats = {"heal": False}
-        have_vecs = self.vectors.count_rows() > 0
-        have_idx = self.buckets.count_rows() > 0
-        hi_vec, modern = _watermark(self.vectors, "max_vec_id")
-        if modern:
-            _, modern = _watermark(self.buckets, "max_vec_id")
-        if have_vecs and hi_vec is None:
-            # stamped appends all expired — same guard as DedupStore:
-            # never run the watermark fast path blind on a non-empty
-            # corpus, use the membership anti-join instead
-            modern = False
-        fast = modern and require_monotonic
+    def prune_dropped(self, spark: SparkSession, before_vec_id: int) -> dict:
+        """Reclaim bucket rows and vectors of vectors dropped with
+        ``vec_id < before_vec_id``; see
+        :meth:`_DedupCore._prune_dropped` for the documented trade."""
+        return self._prune_dropped(spark, before_vec_id, "pruned_vecs")
 
-        vid = F.col(id_col).cast("bigint")
-        row = vectors.agg(F.min(vid).alias("lo"), F.max(vid).alias("hi")).collect()[0]
-        lo_raw, hi_raw = row["lo"], row["hi"]
-        if lo_raw is None:
-            stats["story_path"] = "empty"
-            return vectors
+    def _sketch(self, d: DataFrame, vec_col: str, id_col: str) -> list:
+        from getl_spark.functions.simsearch import _bucketed
 
-        d = vectors
-        tails = _pending_tails(self.buckets, self.vectors, "max_vec_id") if modern else []
-        reproc = _reprocess_cond(tails, vid)
-        anti_span = None
-        if have_vecs and fast:
-            stats["story_path"] = "watermark"
-            if hi_vec is not None and lo_raw <= hi_vec:
-                # ids of a crashed tail (bucket rows committed, vectors
-                # append — the done marker — never reached) sit below a
-                # later batch's watermark on replay; carve them out as
-                # reprocessable instead of failing the membership probe
-                committed = vid <= hi_vec
-                if reproc is not None:
-                    committed = committed & ~reproc
-                old_ids = d.filter(committed).select(vid.alias("vec_id"))
-                vb = _storage_buckets(old_ids, self.vectors)
-                if vb:
-                    present = self.vectors.read(spark, buckets=vb).select("vec_id")
-                    # prune_dropped reclaims dropped vectors but keeps
-                    # their verdict rows — replayed batches containing
-                    # pruned ids must still read as committed
-                    if self.rejects.count_rows() > 0:
-                        rb = _storage_buckets(old_ids, self.rejects)
-                        present = present.unionByName(
-                            self.rejects.read(spark, buckets=rb).select("vec_id")
-                        )
-                    missing = (
-                        old_ids.join(present, "vec_id", "left_anti").limit(1).collect()
-                    )
-                    if missing:
-                        raise ValueError(
-                            f"add_batch: new ids must exceed all stored ids (new min "
-                            f"{lo_raw} <= stored max {hi_vec}); pass "
-                            "require_monotonic=False to override"
-                        )
-                keep = vid > hi_vec
-                if reproc is not None:
-                    keep = keep | reproc
-                d = d.filter(keep)
-            if (
-                hi_vec is not None
-                and hi_raw <= hi_vec
-                and not _overlapping(tails, lo_raw, hi_raw)
-            ):
-                stats["story_path"] = "watermark-replay-noop"
-                return d
-        elif have_vecs:
-            stats["story_path"] = "anti-join"
-            stored_ids = (
-                self.vectors.read(spark)
-                .select("vec_id")
-                .filter((F.col("vec_id") >= lo_raw) & (F.col("vec_id") <= hi_raw))
-                .withColumnRenamed("vec_id", "_vid")
-            )
-            d = d.withColumn("_vid", vid).join(stored_ids, "_vid", "left_anti").drop("_vid")
-            row = d.agg(F.min(vid).alias("lo"), F.max(vid).alias("hi")).collect()[0]
-            anti_span = (row["lo"], row["hi"])
-            if require_monotonic:
-                hi = hi_vec
-                if not modern:
-                    hi = self.vectors.read(spark).agg(F.max("vec_id")).collect()[0][0]
-                lo = anti_span[0]
-                if lo is not None and hi is not None and lo <= hi:
-                    raise ValueError(
-                        f"add_batch: new ids must exceed all stored ids (new min "
-                        f"{lo} <= stored max {hi}); pass require_monotonic=False "
-                        "to override"
-                    )
-        else:
-            stats["story_path"] = "first-batch"
-
-        batch_tok = uuid.uuid4().hex[:12]
-        clipped = fast and hi_vec is not None and lo_raw <= hi_vec
-        if anti_span is not None:
-            # exact-gap stamp (see DedupStore.add_batch): the survivors'
-            # hull may straddle committed spans on the non-monotonic
-            # path — never stamp ranges that claim committed ids
-            eff = (
-                []
-                if anti_span[0] is None
-                else _subtract_ranges(
-                    anti_span[0], anti_span[1],
-                    _committed_ranges(self.vectors, "max_vec_id"),
-                )
-            )
-        else:
-            eff = _effective_ranges(clipped, lo_raw, hi_raw, hi_vec, tails)
-        batch_lo = min((r[0] for r in eff), default=lo_raw)
-        batch_hi = hi_raw
-        stamp = {
-            "op": "add_batch", "batch": batch_tok,
-            "max_vec_id": int(batch_hi), "id_ranges": eff,
-        }
-        healed = _healed_tokens(tails, int(lo_raw), int(hi_raw))
-        if healed:
-            # same row-level verification of the span-derived heal
-            # claim as the text store (ADVICE r7 #2): the crashed
-            # batch's ids are durable in the buckets table
-            claim_tails = [t for t in tails if t["batch"] in set(healed)]
-            claim_cond = _reprocess_cond(claim_tails, F.col("vec_id"))
-            if claim_cond is not None:
-                stored_tail_ids = (
-                    self.buckets.read(spark).select("vec_id").filter(claim_cond)
-                )
-                missing = stored_tail_ids.join(
-                    vectors.select(vid.alias("vec_id")), "vec_id", "left_anti"
-                ).limit(1).collect()
-                if missing:
-                    stats["heal_claims_dropped"] = list(healed)
-                    healed = []
-        if healed:
-            stats["healed_tails"] = list(healed)
-
-        new_b = _bucketed(
-            d, id_col, vec_col, "vec_id",
-            self.cfg["dim"], self.cfg["n_bits"], self.cfg["n_tables"],
-            self.cfg["seed"],
+        c = self.cfg
+        rows = _bucketed(
+            d, id_col, vec_col, "vec_id", c["dim"], c["n_bits"], c["n_tables"], c["seed"]
         ).select(F.col("vec_id").cast("bigint"), "tbl", "bucket").persist()
-        new_ids = new_b.select("vec_id").distinct()
+        return [("buckets", rows, None)]
 
-        if have_idx:
-            new_keys = new_b.select("tbl", "bucket").distinct()
-            sb = _storage_buckets(new_keys, self.buckets)
-            files = self.buckets.current_files()
-            sbset = set(sb)
-            stats.update(
-                index_files_total=len(files),
-                index_files_read=sum(1 for f in files if f["bucket"] in sbset),
-                index_buckets_total=len({f["bucket"] for f in files}),
-                index_buckets_read=len(sb),
-            )
-            stored_touched = self.buckets.read(spark, buckets=sb).join(
-                F.broadcast(new_keys), ["tbl", "bucket"], "left_semi"
-            )
-            stats["stored_semi_plan"] = _plan_string(stored_touched)
-            if tails or not modern:
-                # healing replay: a crashed tail's bucket rows are
-                # committed here AND recomputed in new_b — drop the
-                # stored copies so _cap_buckets counts each row once
-                # (double-counting can push a bucket over max_bucket
-                # and diverge the kept set from the clean run's)
-                stored_touched = stored_touched.join(
-                    F.broadcast(new_ids), "vec_id", "left_anti"
-                )
-            all_b = stored_touched.unionByName(new_b)
-        else:
-            all_b = new_b
-        capped = _cap_buckets(all_b, ["tbl", "bucket"], self.max_bucket)
-        a, b = capped.alias("a"), capped.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.tbl") == F.col("b.tbl"))
-                & (F.col("a.bucket") == F.col("b.bucket"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .select(F.col("a.vec_id").alias("a_id"), F.col("b.vec_id").alias("b_id"))
-            .join(new_ids.withColumnRenamed("vec_id", "b_id"), "b_id", "left_semi")
-            .distinct()
-            .persist()
-        )
+    def _verify(self, vecs: DataFrame, pairs: DataFrame) -> DataFrame:
+        from getl_spark.functions.simsearch import cosine
 
-        new_vecs = d.select(
-            vid.alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("embedding"),
-        )
-        touched = (
-            pairs.select(F.col("a_id").alias("vec_id"))
-            .unionByName(pairs.select(F.col("b_id").alias("vec_id")))
-            .distinct()
-        )
-        old_touched = touched.join(new_ids, "vec_id", "left_anti")
-        tb = _storage_buckets(old_touched, self.vectors)
-        if tb:
-            old_vecs = self.vectors.read(spark, buckets=tb).join(
-                old_touched, "vec_id", "left_semi"
-            )
-            vecs = old_vecs.unionByName(new_vecs)
-        else:
-            vecs = new_vecs
-        vecs = vecs.join(touched, "vec_id", "left_semi")
         av = vecs.select(F.col("vec_id").alias("a_id"), F.col("embedding").alias("a_vec"))
         bv = vecs.select(F.col("vec_id").alias("b_id"), F.col("embedding").alias("b_vec"))
-        verified = (
+        return (
             pairs.join(av, "a_id")
             .join(bv, "b_id")
             .filter(
@@ -1369,149 +1135,3 @@ class EmbDedupStore:
             )
             .select("a_id", "b_id")
         )
-        dropped = verified.select(F.col("b_id").alias("_drop")).distinct()
-        kept = d.join(dropped, vid == F.col("_drop"), "left_anti")
-        # verdict rows: each dropped vector with the smallest lower id
-        # it verified against (deterministic representative)
-        reject_rows = verified.groupBy(F.col("b_id").alias("vec_id")).agg(
-            F.min("a_id").alias("dup_of")
-        )
-
-        # bucket index first, vectors last — the vectors commit is the
-        # done marker the story filter keys on; a crashed tail (bucket
-        # rows whose token never reached the vectors table) triggers
-        # the heal anti-join on the NEXT run, detected from metadata
-        b_to_add = new_b
-        heal = bool(tails) if modern else have_idx
-        if heal:
-            stats["heal"] = True
-            # the buckets table buckets by the hash value, not vec_id —
-            # but a replayed crashed batch re-buckets the SAME vectors,
-            # so existing rows with a vec_id in the batch range carry
-            # (tbl, bucket) keys from this batch's own key set: prune
-            # the heal read to those keys' storage buckets
-            hb = _storage_buckets(new_b.select("tbl", "bucket").distinct(), self.buckets)
-            hfiles = self.buckets.current_files()
-            hset = set(hb)
-            stats.update(
-                heal_files_total=len(hfiles),
-                heal_files_read=sum(1 for f in hfiles if f["bucket"] in hset),
-            )
-            already = (
-                self.buckets.read(spark, buckets=hb)
-                .select("vec_id")
-                .filter((F.col("vec_id") >= batch_lo) & (F.col("vec_id") <= batch_hi))
-                .distinct()
-            )
-            b_to_add = new_b.join(already, "vec_id", "left_anti")
-        self.buckets.append(b_to_add, {**stamp, **self.cfg})
-        rej_to_add = reject_rows
-        rheal = bool(_pending_tails(self.rejects, self.vectors, "max_vec_id")) \
-            if modern else self.rejects.count_rows() > 0
-        if rheal:
-            rb = _storage_buckets(new_ids, self.rejects)
-            already_rej = (
-                self.rejects.read(spark, buckets=rb)
-                .select("vec_id")
-                .filter((F.col("vec_id") >= batch_lo) & (F.col("vec_id") <= batch_hi))
-            )
-            rej_to_add = reject_rows.join(already_rej, "vec_id", "left_anti")
-        self.rejects.append(rej_to_add, dict(stamp))
-        # the vectors commit is the done marker; replays covering
-        # crashed tails declare them healed here (same contract as the
-        # text store's index commit)
-        vec_stamp = dict(stamp)
-        if healed:
-            vec_stamp["heals"] = list(healed)
-        self.vectors.append(new_vecs, vec_stamp)
-        new_b.unpersist()
-        pairs.unpersist()
-        return kept
-
-    def rejected_of(
-        self, spark: SparkSession, ids: DataFrame, id_col: str = "vec_id"
-    ) -> DataFrame:
-        """(vec_id, dup_of) for the subset of ``ids`` the store has
-        dropped — a bucket-pruned read of the persisted verdicts, valid
-        for any mix of new and previously-ingested ids (same replay-
-        recovery contract as :meth:`DedupStore.rejected_of`: verdicts
-        commit BEFORE the vectors done-marker). Batches ingested by a
-        pre-round-7 store predate the verdicts table and return no
-        rows — re-ingest or treat those epochs as all-kept."""
-        self.rejects.refresh()
-        idf = ids.select(F.col(id_col).cast("bigint").alias("vec_id")).distinct()
-        if self.rejects.count_rows() == 0:  # manifest stats, no scan
-            return idf.limit(0).withColumn("dup_of", F.lit(None).cast("bigint"))
-        rb = _storage_buckets(idf, self.rejects)
-        return self.rejects.read(spark, buckets=rb).join(idf, "vec_id", "left_semi")
-
-    # -- maintenance (same contract as DedupStore.compact/expire) ----
-    def _tables(self):
-        return {
-            "buckets": self.buckets,
-            "vectors": self.vectors,
-            "rejects": self.rejects,
-        }
-
-    def compact(self, spark: SparkSession) -> dict:
-        out = {}
-        for name, t in self._tables().items():
-            t.refresh()
-            before = len(t.current_files())
-            t.compact(spark)
-            t.refresh()
-            out[name] = {"files_before": before, "files_after": len(t.current_files())}
-        return out
-
-    def expire(self, keep_last: int = 8) -> dict:
-        return {
-            name: t.expire_snapshots(keep_last)
-            for name, t in self._tables().items()
-        }
-
-    def remove_orphans(self, older_than_seconds: float = 3600) -> dict:
-        return {
-            name: t.remove_orphan_files(older_than_seconds)
-            for name, t in self._tables().items()
-        }
-
-    def prune_dropped(self, spark: SparkSession, before_vec_id: int) -> dict:
-        """RETENTION, mirroring :meth:`DedupStore.prune_dropped`:
-        reclaim the bucket rows and vectors of DROPPED vecs with
-        ``vec_id < before_vec_id``; their verdict rows are KEPT so
-        ``rejected_of`` replay recovery works at any depth. Same
-        documented one-sided equality change: a future vector whose
-        ONLY verified match was pruned will now be kept."""
-        before = int(before_vec_id)
-        self.rejects.refresh()
-        old = (
-            self.rejects.read(spark)
-            .filter(F.col("vec_id") < before)
-            .select("vec_id")
-            .persist()
-        )
-        stamp = {"maintenance": "prune_dropped", "before_vec_id": before}
-        out = {"pruned_vecs": old.count()}
-        try:
-            if out["pruned_vecs"] == 0:
-                return out
-            for name, t in self._tables().items():
-                if name == "rejects":
-                    continue
-                t.refresh()
-                # vectors buckets by vec_id (prunable rewrite); the
-                # bucket index buckets by the hash value — its rewrite
-                # touches every bucket holding any dropped row
-                # (heavyweight, periodic, never per-batch)
-                if name == "vectors":
-                    bks = _storage_buckets(old, t)
-                    keep = t.read(spark, buckets=bks).join(
-                        old, "vec_id", "left_anti"
-                    )
-                    t.overwrite_buckets(keep, bks, dict(stamp))
-                else:
-                    keep = t.read(spark).join(old, "vec_id", "left_anti")
-                    t.overwrite_all(keep, dict(stamp))
-            return out
-        finally:
-            old.unpersist()

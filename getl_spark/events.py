@@ -204,9 +204,12 @@ def generate_change_events(
     n_parts = partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
     if n_parts <= 4096:
         block_size = -(-n_events // n_parts)  # ceil
-        route = F.element_at(
-            F.array(*[F.lit(x).cast("int") for x in _identity_route(n_parts)]),
-            ((F.col("seq") - 1) / block_size).cast("int") + 1,
+        # one SQL expression (not one Column per LUT entry) with exact
+        # integer block division; the LUT literals stay INT so the
+        # Murmur3 partition hash matches _identity_route's inversion
+        lut = ", ".join(str(x) for x in _identity_route(n_parts))
+        route = F.expr(
+            f"element_at(array({lut}), CAST((seq - 1) DIV {block_size} AS INT) + 1)"
         )
         slim = slim.repartition(n_parts, route)
     else:

@@ -8,12 +8,11 @@ ProcessTime rows/sec stats
 (epoch, storage bucket): source offset range, event count, bytes,
 apply latency (FIXTURES.md §5).
 
-Perf: the aggregation (one distributed job over the epoch slice,
-grouped by the target's bucket transform — the hash the MERGE already
-clustered on) collects <= num_buckets rows; the table write itself is
-a driver-side pyarrow append (no second Spark job), and the collected
-stats are returned so the caller derives (event_count, max_seq) for
-the checkpoint without re-reading anything.
+Perf: the caller builds the rows. :meth:`CDCPipeline.apply_epoch`
+derives them (<= num_buckets rows) with one small aggregation over the
+per-key rows it already persists for winner selection, so lineage
+never re-scans the epoch's events; the table write is a driver-side
+pyarrow append (no Spark job).
 
 Idempotence: re-recording an epoch (crash repair) drops that epoch's
 rows in the same atomic commit that adds the new ones.
@@ -24,7 +23,6 @@ from __future__ import annotations
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from getl_spark.lake import LakeCatalog, PartitionSpec
 from getl_spark.schema import parse_ddl
@@ -34,8 +32,6 @@ LINEAGE_SCHEMA = parse_ddl(
     "event_count bigint, bytes bigint, epoch_latency_ms bigint, "
     "pipeline string"
 )
-
-_COLS = [f.name for f in LINEAGE_SCHEMA.fields]
 
 
 class LineageRecorder:
@@ -82,45 +78,6 @@ class LineageRecorder:
         # rename-aware upgrade path
         if "apply_latency_ms" in self.table.schema().fieldNames():
             self.table.rename_column("apply_latency_ms", "epoch_latency_ms")
-
-    def compute(self, events: DataFrame, epoch: int, bucket_expr, latency_ms: int, pipeline: str = "tail") -> pd.DataFrame:
-        """One distributed agg -> <= num_buckets collected rows."""
-        rows = (
-            events.groupBy(bucket_expr.cast("int").alias("partition_id"))
-            .agg(
-                F.min("seq").alias("seq_min"),
-                F.max("seq").alias("seq_max"),
-                F.count(F.lit(1)).alias("event_count"),
-                F.coalesce(F.sum(F.length("content")), F.lit(0)).cast("bigint").alias("bytes"),
-            )
-            .collect()
-        )
-        pdf = pd.DataFrame(
-            [
-                {
-                    "epoch": int(epoch),
-                    "partition_id": int(r["partition_id"]),
-                    "seq_min": int(r["seq_min"]),
-                    "seq_max": int(r["seq_max"]),
-                    "event_count": int(r["event_count"]),
-                    "bytes": int(r["bytes"]),
-                    "epoch_latency_ms": int(latency_ms),
-                    "pipeline": pipeline,
-                }
-                for r in rows
-            ],
-            columns=_COLS,
-        )
-        num_cols = [c for c in _COLS if c not in ("partition_id", "pipeline")]
-        return pdf.astype({c: "int64" for c in num_cols}).astype(
-            {"partition_id": "int32"}
-        ) if len(pdf) else pdf
-
-    def record(self, spark: SparkSession, events: DataFrame, epoch: int, bucket_expr, latency_ms: int, pipeline: str = "tail") -> pd.DataFrame:
-        """Aggregate + persist lineage; returns the epoch's rows."""
-        pdf = self.compute(events, epoch, bucket_expr, latency_ms, pipeline)
-        self.write(pdf, epoch, pipeline)
-        return pdf
 
     def write(self, pdf: pd.DataFrame, epoch: int, pipeline: str = "tail") -> pd.DataFrame:
         """Persist precomputed lineage rows (idempotent per

@@ -440,31 +440,23 @@ class CDCPipeline:
         on ``content``, or ``dedup_column``) or an
         :class:`EmbDedupStore` (judged on an ``array``-typed embedding
         column — events carrying vectors alongside/instead of text).
-        Both expose the same add_batch / rejected_of replay contract."""
+        Both expose the same add_batch / rejected_of replay contract
+        and declare the id / value columns their input carries."""
         store = self.dedup_store
-        is_emb = hasattr(store, "vectors")  # EmbDedupStore
-        col = self.dedup_column or ("embedding" if is_emb else "content")
-        if is_emb:
-            rows = winners.filter(
-                (F.col("op") != "D") & F.col(col).isNotNull()
-            ).select(
-                F.col("seq").cast("bigint").alias("vec_id"),
-                F.col(col).cast("array<double>").alias("embedding"),
-            )
-            id_out = "vec_id"
-        else:
-            rows = winners.filter(
-                (F.col("op") != "D") & F.col(col).isNotNull()
-            ).select(
-                F.col("seq").cast("bigint").alias("doc_id"),
-                F.col(col).alias("text"),
-            )
-            id_out = "doc_id"
+        col = self.dedup_column or store.EVENT_COL
+        rows = winners.filter((F.col("op") != "D") & F.col(col).isNotNull()).select(
+            F.col("seq").cast("bigint").alias(store.ID_COL),
+            F.col(col).cast(store.VALUE_TYPE).alias(store.VALUE_COL),
+        )
         store.add_batch(self.spark, rows)
         self.last_dedup_stats = dict(store.last_batch_stats)
+        if self.last_dedup_stats["story_path"] == "empty":
+            # no content rows (an empty or tombstone-only epoch): none
+            # can carry a verdict, so skip the verdict read's jobs
+            return winners
         rejected = store.rejected_of(self.spark, rows)
         return winners.join(
-            rejected.select(F.col(id_out).alias("seq")), "seq", "left_anti"
+            rejected.select(F.col(store.ID_COL).alias("seq")), "seq", "left_anti"
         )
 
     def _resolve_auto_salt(self, events: DataFrame, per_key: DataFrame) -> None:

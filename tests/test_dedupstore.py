@@ -999,3 +999,35 @@ def test_emb_healing_replay_cap_not_double_counted(spark, tmp_path):
         "healing replay must match the clean run: the tail's stored "
         "bucket rows must not double the per-bucket counts"
     )
+
+
+def test_emb_remove_orphans_cleans_crashed_batch_files(spark, tmp_path):
+    """EmbDedupStore.remove_orphans: an unreferenced parquet file in the
+    bucket table's data dir (a crashed add_batch's leftover) is swept;
+    the vectors and verdict tables lose nothing, and the story still
+    reads a replay as the no-op."""
+    import os
+
+    from conftest import SF_DIR
+
+    from getl_spark.dedupstore import EmbDedupStore
+
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet")).withColumn(
+        "embedding", F.transform("embedding", lambda x: x.cast("double"))
+    )
+    wh = str(tmp_path / "wh")
+    store = EmbDedupStore(wh, dim=64, threshold=0.3, n_bits=6, n_tables=4,
+                          seed=99, max_bucket=None)
+    batch = emb.filter("vec_id <= 100")
+    store.add_batch(spark, batch).count()
+
+    orphan = os.path.join(wh, "_embdedup_buckets", "data", "b00000-orphan-deadbeef.parquet")
+    with open(orphan, "wb") as fh:
+        fh.write(b"not really parquet")
+
+    res = store.remove_orphans(older_than_seconds=0)
+    assert res == {"buckets": 1, "vectors": 0, "rejects": 0}
+    assert not os.path.exists(orphan)
+
+    assert store.add_batch(spark, batch).count() == 0
+    assert store.last_batch_stats["story_path"] == "watermark-replay-noop"
