@@ -82,16 +82,14 @@ class AnnIndex:
         self._sync_centroids()
 
     # -- centroid sidecars -------------------------------------------
-    def _sidecar_path(self, build_id: str | None) -> str:
-        if build_id is None:  # pre-round-6 layout (no build id stamped)
-            return os.path.join(self.warehouse, f"{self.name}.centroids.json")
+    def _sidecar_path(self, build_id: str) -> str:
         return os.path.join(
             self.warehouse, f"{self.name}.centroids.{build_id}.json"
         )
 
     def _committed_build_id(self) -> str | None:
         """Build id of the newest committed build snapshot (metadata
-        only). None for an empty table or a pre-round-6 index."""
+        only). None for a never-built index."""
         for snap in reversed(self.table.meta["snapshots"]):
             bid = (snap.get("summary") or {}).get("build_id")
             if bid is not None:
@@ -102,17 +100,15 @@ class AnnIndex:
         """Load the centroids the COMMITTED snapshot was built under.
         No-op when the handle already holds that build."""
         bid = self._committed_build_id()
+        if bid is None or bid == self.build_id:
+            return  # never built, or the handle already holds it
         path = self._sidecar_path(bid)
-        if bid is not None and bid == self.build_id:
-            return
         if not os.path.exists(path):
-            if bid is not None:
-                raise ValueError(
-                    f"AnnIndex {self.name!r}: committed build {bid} has no "
-                    f"centroids sidecar at {path} — the sidecar was removed "
-                    "out-of-band; rebuild the index"
-                )
-            return  # never built (or legacy sidecar also absent)
+            raise ValueError(
+                f"AnnIndex {self.name!r}: committed build {bid} has no "
+                f"centroids sidecar at {path} — the sidecar was removed "
+                "out-of-band; rebuild the index"
+            )
         with open(path) as fh:
             doc = json.load(fh)
         if doc["dim"] != self.dim or doc["n_centroids"] != self.n_centroids:
@@ -141,14 +137,11 @@ class AnnIndex:
     def _gc_sidecars(self) -> None:
         """Drop sidecars of superseded builds (best-effort; the live
         build's file is the one the committed snapshot references)."""
-        keep = {
-            os.path.basename(self._sidecar_path(self.build_id)),
-            os.path.basename(self._sidecar_path(None)),
-        }
+        keep = os.path.basename(self._sidecar_path(self.build_id))
         prefix = f"{self.name}.centroids."
         try:
             for fn in os.listdir(self.warehouse):
-                if fn.startswith(prefix) and fn.endswith(".json") and fn not in keep:
+                if fn.startswith(prefix) and fn.endswith(".json") and fn != keep:
                     os.remove(os.path.join(self.warehouse, fn))
         except OSError:
             pass

@@ -91,9 +91,12 @@ filter falls back to an anti-join against the done table's id column
 column — linear, documented). The O(new + touched) bound is a
 property of the contract path, as is batch==one-shot equality.
 
-Stores written before round 6 lack the summary stamps; they are
-detected (any data snapshot missing ``max_<id>``/``batch``) and
-serviced through the same legacy scan path.
+A store whose story stamps are not all visible (a data snapshot
+missing ``max_<id>``/``batch``, or every stamped append expired) is
+serviced through the same anti-join path. An append stamped
+``max_<id>`` without ``id_ranges`` is an older layout whose tail
+ranges could only be guessed: ``add_batch`` refuses it and asks for a
+rebuild.
 
 Maintenance & retention contract: an always-on ingest appends a file
 per touched bucket and a snapshot per batch, forever. ``compact()``
@@ -102,7 +105,7 @@ snapshot metadata, and ``prune_dropped(before_id)`` reclaims the
 sketch rows and content of long-dropped items (their verdict rows are
 kept, so replay recovery still works). All three stamp a maintenance
 marker into their snapshot summaries so the watermark reader skips
-them — they never flip a store onto the legacy path. Retention
+them — they never flip a store onto the anti-join path. Retention
 defaults keep everything: dropped items' sketch rows are part of the
 equality contract above, so pruning them is an explicit, documented
 trade (see :meth:`_DedupCore._prune_dropped`). ``expire`` must keep at
@@ -134,7 +137,7 @@ def _is_maintenance(summ: dict) -> bool:
     """Compaction / retention-prune / delete snapshots rewrite or drop
     EXISTING rows only — they introduce no new doc ids, so the
     append-summary watermarks stay valid across them and they must not
-    flip the store onto the legacy scan path."""
+    flip the store onto the anti-join path."""
     return bool(
         summ.get("compaction") or summ.get("maintenance") or summ.get("delete_where")
     )
@@ -164,9 +167,8 @@ def _watermark(table, key: str) -> tuple[int | None, bool]:
     """(high-watermark, modern) from snapshot summaries — no scan.
 
     ``modern`` is False when any data-bearing snapshot lacks the
-    watermark/token stamps (store written before round 6, or the
-    table was compacted by a rewrite that added rows) — callers then
-    fall back to the legacy scan path.
+    watermark/token stamps (an unstamped append, or a rewrite that
+    added rows) — callers then fall back to the anti-join path.
     """
     hi, modern = None, True
     for snap in table.meta["snapshots"]:
@@ -209,38 +211,28 @@ def _pending_tails(prior, done, key: str) -> list[dict]:
     Each tail carries the EXACT id ranges its append added (see
     :func:`_summary_ranges`).
     """
-    done_toks, stamped_committed = set(), []
+    done_toks, committed = set(), []
     for s in _data_summaries(done):
         done_toks.add(s.get("batch"))
         done_toks.update(s.get("heals") or [])
-        # STAMPED committed spans only — legacy inferred ranges are a
-        # superset guess and must not shrink a tail (ADVICE r7 #1)
-        stamped_committed.extend(s.get("id_ranges") or [])
+        committed.extend(s.get("id_ranges") or [])
     tails = []
     for s, ranges in _summary_ranges(prior, key):
-        tok, hi = s.get("batch"), s.get(key)
+        tok = s.get("batch")
         if tok is None or tok in done_toks or not ranges:
             continue
-        if stamped_committed:
-            # A replay that only PARTIALLY covered this tail (crash,
-            # then restart with a smaller epoch size) committed a SLICE
-            # of its ids under its own token + id_ranges stamp. Those
-            # ids are judged and done: subtract every stamped committed
-            # span so (a) the reprocess carve-out shrinks to the truly
-            # uncovered remainder — re-including them would re-append
-            # their band/vector rows and break cap exactness — and (b)
-            # a tail whose every range is covered resolves outright
-            # instead of forcing heal scans on all future batches.
-            shrunk = []
-            for l, h in ranges:
-                if h is None:
-                    shrunk.append([l, h])
-                    continue
-                shrunk.extend(_subtract_ranges(l, h, stamped_committed))
-            if not shrunk:
-                continue  # fully covered by stamped commits — resolved
-            ranges = shrunk
-        tails.append({"batch": tok, "hi": None if hi is None else int(hi), "ranges": ranges})
+        # A replay that only PARTIALLY covered this tail (crash, then
+        # restart with a smaller epoch size) committed a SLICE of its
+        # ids under its own token + id_ranges stamp. Those ids are
+        # judged and done: subtract every committed span so (a) the
+        # reprocess carve-out shrinks to the truly uncovered remainder
+        # — re-including them would re-append their band/vector rows
+        # and break cap exactness — and (b) a tail whose every range is
+        # covered resolves outright instead of forcing heal scans on
+        # all future batches.
+        ranges = [r for l, h in ranges for r in _subtract_ranges(l, h, committed)]
+        if ranges:
+            tails.append({"batch": tok, "ranges": ranges})
     return tails
 
 
@@ -249,20 +241,16 @@ def _summary_ranges(table, key: str):
     stamped append records ``id_ranges`` — the driver-side list of
     ``[lo, hi]`` spans its effective (non-committed-before) ids
     occupied; usually one span, several when the append itself
-    reprocessed earlier tails. Appends from round-6 stores lack the
-    stamp; their single range is then inferred as ``(prev_hi, hi]``
-    from the preceding data summaries' watermarks — a conservative
-    superset, exact under the monotonic-id contract except that it
-    may reach below the batch's true lo into id space no committed
-    batch occupies (harmless: carving empty id space out of the
-    membership probe changes nothing). Pure metadata."""
-    prev_hi = None
+    reprocessed earlier tails. Unstamped appends yield None. An append
+    stamped with ``key`` but no ``id_ranges`` is the older layout whose
+    ranges had to be guessed: it is refused. Pure metadata."""
     for s in _data_summaries(table):
-        hi, ranges = s.get(key), s.get("id_ranges")
-        if hi is not None:
-            if ranges is None:
-                ranges = [[None if prev_hi is None else prev_hi + 1, int(hi)]]
-            prev_hi = int(hi) if prev_hi is None else max(prev_hi, int(hi))
+        ranges = s.get("id_ranges")
+        if ranges is None and s.get(key) is not None:
+            raise ValueError(
+                f"dedup store table {table.location!r} has an append stamped "
+                f"{key} without id_ranges (the older layout); rebuild the store"
+            )
         yield s, ranges
 
 
@@ -275,22 +263,14 @@ def _reprocess_cond(tails: list[dict], id_expr):
     cond = None
     for t in tails:
         for lo, hi in t["ranges"]:
-            if hi is None:
-                continue
-            c = id_expr <= F.lit(int(hi))
-            if lo is not None:
-                c = c & (id_expr >= F.lit(int(lo)))
+            c = (id_expr <= F.lit(int(hi))) & (id_expr >= F.lit(int(lo)))
             cond = c if cond is None else (cond | c)
     return cond
 
 
 def _overlapping(tails: list[dict], lo: int, hi: int) -> list[dict]:
     return [
-        t for t in tails
-        if any(
-            h is not None and int(h) >= lo and (l is None or int(l) <= hi)
-            for l, h in t["ranges"]
-        )
+        t for t in tails if any(int(h) >= lo and int(l) <= hi for l, h in t["ranges"])
     ]
 
 
@@ -301,26 +281,13 @@ def _healed_tokens(tails: list[dict], lo: int, hi: int) -> list[str]:
     reprocessed that crashed batch". Stamped as ``heals`` on the done
     table's append; a partially-covering run claims nothing and the
     tail stays pending (safe: its ranges keep being reprocessable)."""
-    out = []
-    for t in tails:
-        # a legacy (round-6, unstamped) first-batch tail has lo=None —
-        # its true lower edge is unknowable from metadata, so require
-        # the batch to at least START at or below the tail's hi: a
-        # disjoint higher batch (lo > hi) reprocesses none of the
-        # tail's ids and must not claim it healed (the whole-batch
-        # replay contract makes lo <= hi the honest metadata proxy)
-        ok = all(
-            h is not None
-            and int(h) <= hi
-            and (lo <= int(l) if l is not None else lo <= int(h))
-            for l, h in t["ranges"]
-        )
-        if ok:
-            out.append(t["batch"])
-    return out
+    return [
+        t["batch"] for t in tails
+        if all(lo <= int(l) and int(h) <= hi for l, h in t["ranges"])
+    ]
 
 
-def _committed_ranges(done, key: str) -> list[list[int | None]]:
+def _committed_ranges(done, key: str) -> list[list[int]]:
     """``[lo, hi]`` id spans the ``done`` table's data summaries claim
     as committed (:func:`_summary_ranges`); used to stamp exact-gap
     ranges on the non-monotonic path."""
@@ -334,26 +301,22 @@ def _subtract_ranges(lo: int, hi: int, committed: list) -> list[list[int]]:
     contract (``ranges never claim committed ids``) on the
     require_monotonic=False path: a crash there must not leave a tail
     whose reprocess carve-out swallows other batches' committed ids."""
-    spans = [[None if lo is None else int(lo), int(hi)]]
+    spans = [[int(lo), int(hi)]]
     for cl, ch in committed:
-        if ch is None:
-            continue
-        ch = int(ch)
-        cl = int(cl) if cl is not None else None
+        cl, ch = int(cl), int(ch)
         nxt = []
         for sl, sh in spans:
-            # sl None = unbounded below (legacy inferred tail range)
-            if (sl is not None and ch < sl) or (cl is not None and cl > sh):
+            if ch < sl or cl > sh:
                 nxt.append([sl, sh])
                 continue
-            if cl is not None and (sl is None or cl > sl):
-                nxt.append([sl, min(sh, cl - 1)])
+            if cl > sl:
+                nxt.append([sl, cl - 1])
             if ch < sh:
                 nxt.append([ch + 1, sh])
         spans = nxt
         if not spans:
             break
-    return sorted(spans, key=lambda r: (r[0] is not None, r[0] or 0, r[1]))
+    return sorted(spans)
 
 
 def _effective_ranges(
@@ -370,12 +333,10 @@ def _effective_ranges(
     out = []
     if hi_raw > watermark:
         out.append([int(watermark) + 1, int(hi_raw)])
-    for t in _overlapping(tails, lo_raw, hi_raw):
+    for t in tails:
         for l, h in t["ranges"]:
-            if h is None or int(h) < lo_raw or (l is not None and int(l) > hi_raw):
-                continue
-            lo_eff = int(lo_raw) if l is None else max(int(l), int(lo_raw))
-            out.append([lo_eff, min(int(h), int(hi_raw))])
+            if int(h) >= lo_raw and int(l) <= hi_raw:
+                out.append([max(int(l), int(lo_raw)), min(int(h), int(hi_raw))])
     return sorted(out)
 
 
@@ -620,7 +581,7 @@ class _DedupCore:
                 stats["story_path"] = "watermark-replay-noop"
                 return d
         elif have_done:
-            # legacy / non-monotonic path: true membership anti-join
+            # unstamped / non-monotonic path: true membership anti-join
             # against the done table, range-pruned to the batch's id
             # span (still a scan of its id column, see module docstring)
             stats["story_path"] = "anti-join"
@@ -688,7 +649,7 @@ class _DedupCore:
             stats["healed_tails"] = list(healed)
 
         # a table of a crashed tail holds rows this batch recomputes;
-        # the legacy gate keys on the table being healed itself (an
+        # the unstamped gate keys on the table being healed itself (an
         # unstamped store whose first batch crashed has an empty done
         # table but populated earlier tables, ADVICE r6 #2)
         heal = {

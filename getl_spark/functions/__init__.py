@@ -1,4 +1,4 @@
 """Column-function families: the Spark-side replacements for getl's
 utils (DateUtils/StringUtils/GenerationUtils, SURVEY §2.8) plus the
 training-data-pipeline operators (text analysis, dedup, similarity
-search, multimodal plumbing) that a 100 TB corpus engine needs."""
+search) that a 100 TB corpus engine needs."""

@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from getl_spark.functions.text import (
-    char_shingles,
     fingerprint_sha256,
     sha_hash60,
     tokens,
@@ -51,67 +50,6 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
 
 
 # -------------------------------------------------------------- minhash
-
-
-def minhash_signature(shingles_col, num_hashes: int = 64, hash_fn: str = "xxhash64"):
-    """K minhashes: min over shingles of hash(shingle, salt_i).
-    Returns array<bigint> of length num_hashes.
-
-    hash_fn: 'xxhash64' (fast path — one JVM hash per shingle per K,
-    array<bigint>) or 'sha256' (cross-engine: bit-identical in DuckDB
-    so the driver can oracle-check the full LSH pipeline,
-    array<string>). The sha mode amortizes two ways: one sha256 digest
-    is 64 hex chars = FOUR independent 60-bit values (15-hex-char
-    slices at offsets 1/16/31/46), so K minhashes cost ceil(K/4)
-    digests per shingle; and the slices stay STRINGS — fixed-length
-    lowercase hex compares lexicographically exactly like the numeric
-    value, so no per-value hex->int conv (measured: 32 convs/shingle
-    cost more than the 8 digests).
-    """
-    if hash_fn == "xxhash64":
-        def per_shingle(s):
-            return F.array(*[F.xxhash64(s, F.lit(i)) for i in range(num_hashes)])
-
-        sentinel = F.lit((1 << 63) - 1).cast("long")
-    elif hash_fn == "sha256":
-        def per_shingle(s):
-            outs = []
-            for block in range((num_hashes + 3) // 4):
-                digest = F.sha2(F.concat(F.lit(f"{block}:"), s), 256)
-                for off_i in range(4):
-                    if block * 4 + off_i >= num_hashes:
-                        break
-                    outs.append(F.substring(digest, off_i * 15 + 1, 15))
-            return F.array(*outs)
-
-        sentinel = F.lit("g")  # sorts after every hex char [0-9a-f]
-    else:
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
-    # ONE pass over the shingle array: hash each shingle into a K-vector
-    # once, fold element-wise minima — K separate array_min/transform
-    # lambdas would re-hash every shingle K times (no CSE across
-    # higher-order lambdas). xxhash64's sentinel is Long.MAX (it spans
-    # the full signed range).
-    vals = F.transform(shingles_col, per_shingle)
-    return F.aggregate(
-        vals,
-        F.array_repeat(sentinel, num_hashes),
-        lambda acc, v: F.zip_with(acc, v, lambda a, b: F.least(a, b)),
-    )
-
-
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 64,
-    shingle_words: int = 3,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    sh = word_shingles(F.col(text_col), shingle_words)
-    return df.select(id_col, text_col).withColumn(
-        "minhash", minhash_signature(sh, num_hashes, hash_fn)
-    )
 
 
 def minhash_signatures_df(

@@ -203,26 +203,6 @@ class LakeTable:
     def exists(location: str) -> bool:
         return os.path.exists(os.path.join(location, "metadata", "VERSION"))
 
-    @staticmethod
-    def create_or_load(
-        location: str,
-        schema: StructType,
-        partition_spec: PartitionSpec | None = None,
-        properties: dict | None = None,
-    ) -> "LakeTable":
-        if LakeTable.exists(location):
-            return LakeTable.load(location)
-        try:
-            return LakeTable.create(location, schema, partition_spec, properties)
-        except FileExistsError:
-            # lost the creation race: the winner wrote v0 first; wait
-            # out the tiny window before its VERSION write if needed
-            for _ in range(50):
-                if LakeTable.exists(location):
-                    return LakeTable.load(location)
-                time.sleep(0.01)
-            raise
-
     def refresh(self) -> "LakeTable":
         t = LakeTable.load(self.location)
         self.meta, self.version = t.meta, t.version

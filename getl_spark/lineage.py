@@ -15,7 +15,10 @@ never re-scans the epoch's events; the table write is a driver-side
 pyarrow append (no Spark job).
 
 Idempotence: re-recording an epoch (crash repair) drops that epoch's
-rows in the same atomic commit that adds the new ones.
+rows in the same atomic commit that adds the new ones, per
+(pipeline, epoch): pipelines sharing a warehouse share the table. A
+table missing a ``LINEAGE_SCHEMA`` column (the older layout without
+``pipeline``) is refused on open, not migrated: rebuild it.
 """
 
 from __future__ import annotations
@@ -35,49 +38,21 @@ LINEAGE_SCHEMA = parse_ddl(
 
 
 class LineageRecorder:
-    def __init__(
-        self,
-        catalog: LakeCatalog,
-        table_name: str = "_lineage",
-        legacy_owner: str = "tail",
-    ):
+    def __init__(self, catalog: LakeCatalog, table_name: str = "_lineage"):
         self.table = catalog.create_table(
             table_name, LINEAGE_SCHEMA, PartitionSpec.none(), if_not_exists=True
         )
-        # two pipelines sharing one warehouse share this table; without
-        # a pipeline column their epoch numbers collide and the repair
-        # path deletes each other's rows. Pre-upgrade tables evolve in
-        # place (the column is last, so row layout stays compatible) and
-        # legacy NULL rows are backfilled to ``legacy_owner`` in the
-        # same upgrade — otherwise every pipeline claims them in
-        # metrics() and any pipeline's crash repair deletes them. A
-        # pre-upgrade warehouse necessarily had ONE writer (epoch
-        # numbers would have collided otherwise), so the first pipeline
-        # to touch it post-upgrade passes its own name and keeps its
-        # metrics history continuous.
-        # gate on NULL presence, not column absence: a warehouse
-        # upgraded under a revision that added the column WITHOUT
-        # backfilling already has NULL legacy rows, and metrics()/crash
-        # repair filter on pipeline == name — unbackfilled NULLs would
-        # be permanently invisible and never repaired.
-        if "pipeline" not in self.table.schema().fieldNames():
-            self.table.add_column("pipeline", "string")
-        # probe just the one column first: the steady state (no NULLs)
-        # must not load the full history on every recorder construction
-        probe = self.table.read_pandas(columns=["pipeline"])
-        if len(probe) and probe["pipeline"].isna().any():
-            existing = self.table.read_pandas()
-            existing["pipeline"] = existing["pipeline"].fillna(legacy_owner)
-            self.table.overwrite_pandas(
-                existing, {"backfill": f"pipeline<-{legacy_owner} (legacy rows)"}
+        # metadata-only layout check: without the ``pipeline`` column two
+        # pipelines sharing the table would repair each other's rows, so
+        # an older layout is refused, not guessed at; a column added
+        # after LINEAGE_SCHEMA still passes
+        have = set(self.table.schema().fieldNames())
+        missing = [c for c in LINEAGE_SCHEMA.fieldNames() if c not in have]
+        if missing:
+            raise ValueError(
+                f"lineage table {table_name!r} has an older layout without "
+                f"column(s) {missing}; rebuild it"
             )
-        # pre-round-4 tables called this column apply_latency_ms, but
-        # the value has always been the WHOLE-EPOCH apply latency
-        # (copied onto every bucket row) — renamed so the name claims
-        # exactly what's measured; legacy files read through the
-        # rename-aware upgrade path
-        if "apply_latency_ms" in self.table.schema().fieldNames():
-            self.table.rename_column("apply_latency_ms", "epoch_latency_ms")
 
     def write(self, pdf: pd.DataFrame, epoch: int, pipeline: str = "tail") -> pd.DataFrame:
         """Persist precomputed lineage rows (idempotent per
@@ -88,11 +63,8 @@ class LineageRecorder:
             (s["summary"].get("pipeline"), int(s["summary"].get("epoch", -1)))
             for s in self.table.meta["snapshots"]
         }
-        mine = (pipeline, int(epoch)) in recorded or (None, int(epoch)) in recorded
-        if mine:
-            # crash repair: atomically replace this pipeline's epoch rows
-            # ONLY (legacy NULLs were backfilled at upgrade, so no other
-            # pipeline's rows can match here)
+        if (pipeline, int(epoch)) in recorded:
+            # crash repair: atomically replace this pipeline's epoch rows only
             existing = self.table.read_pandas()
             keep = existing[
                 ~(

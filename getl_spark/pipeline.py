@@ -35,6 +35,8 @@ from pyspark.storagelevel import StorageLevel
 from getl_spark.checkpoint import CheckpointManager
 from getl_spark.dedup import lww_dedup
 from getl_spark.lake import LakeCatalog, LakeTable, PartitionSpec
+from getl_spark.lake.merge import MergeValidationError
+from getl_spark.lake.table import CommitSkipped
 from getl_spark.lineage import LineageRecorder
 from getl_spark.schema import parse_ddl
 
@@ -167,7 +169,7 @@ class CDCPipeline:
         # an existing table's stored mode wins over the constructor arg
         self.merge_mode = self.target.properties.get("write.mode", merge_mode)
         self.checkpoints = CheckpointManager(self.catalog, method=checkpoint_method)
-        self.lineage = LineageRecorder(self.catalog, legacy_owner=name)
+        self.lineage = LineageRecorder(self.catalog)
         self.dedup_store = dedup_store
         self.dedup_column = dedup_column
         self.last_dedup_stats: dict = {}
@@ -274,11 +276,9 @@ class CDCPipeline:
             expected_rows = getattr(self, "_deferred_winner_check", None)
 
             def _agg_retry_src() -> DataFrame:
-                from getl_spark.dedup import lww_dedup as _lww
-
                 self.last_lww_strategy = "agg"
                 return _build_src(
-                    _lww(events, self.keys, "seq", "commit", strategy="agg")
+                    lww_dedup(events, self.keys, "seq", "commit", strategy="agg")
                 )
 
             src = _build_src(winners)
@@ -315,9 +315,6 @@ class CDCPipeline:
                     # that committed this epoch first must make OUR
                     # append a no-op, not a duplicate delta (append
                     # rebases blindly at the commit layer otherwise)
-                    from getl_spark.lake.merge import MergeValidationError
-                    from getl_spark.lake.table import CommitSkipped
-
                     wm_key = f"watermark.{self.name}"
 
                     def _pre(meta, _e=int(epoch), _k=wm_key):
@@ -360,8 +357,6 @@ class CDCPipeline:
                     except CommitSkipped:
                         res = {"skipped": True, "reason": f"epoch {epoch} committed concurrently"}
             else:
-                from getl_spark.lake.merge import MergeValidationError
-
                 def _mb(s: DataFrame):
                     b = (
                         self.target.merge(s)
@@ -742,9 +737,8 @@ class CDCPipeline:
         counters as a queryable table)."""
         spark = spark or self.spark
         lin = self.lineage.table.read(spark)
-        # scope to THIS pipeline (legacy pre-upgrade rows were
-        # backfilled to "tail", the pre-upgrade default, at upgrade —
-        # no NULLs survive, so no cross-pipeline double-attribution)
+        # scope to THIS pipeline: pipelines sharing a warehouse share
+        # the lineage table
         lin = lin.filter(F.col("pipeline") == self.name)
         return (
             lin.groupBy("epoch")

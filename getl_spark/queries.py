@@ -1087,10 +1087,10 @@ def q_ann_lsh_topk(spark, sf_dir):
 def _sql_minhash_core(num_hashes: int, bands: int, cap: int) -> str:
     """Shared CTE chain: documents -> shingles -> signature -> capped
     band buckets -> candidate pairs. Mirrors word_shingles (3-word,
-    distinct, on lower/trim/ws-collapsed text) and minhash_signature
+    distinct, on lower/trim/ws-collapsed text) and minhash_signatures_df
     (sha256 mode) exactly."""
     rows = num_hashes // bands
-    # mirrors minhash_signature's sha mode: hash i is the 15-hex-char
+    # mirrors minhash_signatures_df's sha mode: hash i is the 15-hex-char
     # slice at offset (i%4)*15+1 of sha256('<i//4>:' || shingle), kept
     # as a STRING (fixed-length hex: lexicographic min == numeric min)
     mh_exprs = ",\n    ".join(

@@ -6,9 +6,9 @@ by file-mask variable (/root/reference/src/main/groovy/getl/proc/FileCopier.groo
 
 1. AQE skew-join splitting (on by default in session.py) for the
    MERGE join;
-2. explicit salted repartition for writes: a hot storage bucket
-   (zipf repo) is fanned out over ``salt`` sub-partitions so no single
-   task owns the whole bucket;
+2. salted writes: a table's ``write.salt`` property fans a hot storage
+   bucket (zipf repo) out over that many write tasks so no single task
+   owns the whole bucket;
 3. this module's detector sizes the salt factor from an observed key
    histogram — the "decide salt factor from observed histogram" step
    SURVEY §4.2 calls out as genuinely custom.
@@ -18,12 +18,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def key_histogram(df: DataFrame, cols: list[str], sample_fraction: float = 0.05) -> DataFrame:
-    """Approximate per-key share from a sample (partial-agg count)."""
-    s = df.sample(fraction=sample_fraction, seed=13) if sample_fraction < 1.0 else df
-    return s.groupBy(*cols).count().orderBy(F.desc("count"))
 
 
 def salt_factor_from_counts(
@@ -65,27 +59,3 @@ def detect_salt_factor(
     return salt_factor_from_counts(
         int(stats["hot"]), int(stats["total"]), num_partitions, skew_threshold, max_salt
     )
-
-
-def salted_key(cols: list[str], salt: int, entropy_cols: list[str] | None = None):
-    """``concat(key, '#', pmod(hash(entropy), salt))`` — the salted join
-    key of the north rule. ``entropy_cols`` default to the key itself
-    plus a row-varying column the caller supplies."""
-    ent = entropy_cols or cols
-    return F.concat_ws(
-        "#",
-        *[F.col(c) for c in cols],
-        F.pmod(F.xxhash64(*[F.col(c) for c in ent]), F.lit(salt)).cast("string"),
-    )
-
-
-def repartition_salted(
-    df: DataFrame, num_partitions: int, cols: list[str], salt: int, entropy_cols: list[str] | None = None
-) -> DataFrame:
-    """Hash-repartition by (key, salt-of-entropy): rows of one hot key
-    spread over ``salt`` partitions instead of one."""
-    if salt <= 1:
-        return df.repartition(num_partitions, *cols)
-    ent = entropy_cols or df.columns
-    salt_col = F.pmod(F.xxhash64(*[F.col(c) for c in ent]), F.lit(salt))
-    return df.repartition(num_partitions, *([F.col(c) for c in cols] + [salt_col]))

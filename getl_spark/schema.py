@@ -272,12 +272,3 @@ def key_columns(schema: StructType) -> list[str]:
         if f.metadata.get("isKey")
     ]
     return [n for _, n in sorted(keys)]
-
-
-def partition_columns(schema: StructType) -> list[str]:
-    parts = [
-        (f.metadata.get("ordPartition", 0), f.name)
-        for f in schema.fields
-        if f.metadata.get("isPartition")
-    ]
-    return [n for _, n in sorted(parts)]

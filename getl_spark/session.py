@@ -9,7 +9,8 @@ Scale notes (100 TB / 1000-executor design intent):
 - AQE on: runtime coalescing, skew-join splitting.
 - shuffle.partitions defaults to 2x cores locally; on a real cluster
   leave AQE's coalescing to size post-shuffle partitions.
-- Arrow enabled for the few pandas-UDF paths (lineage, multimodal).
+- Arrow enabled for the pandas-UDF paths (simsearch's
+  ``_all_buckets_udf`` and ``_ivf_cells_udf``).
 - Session timezone pinned to UTC so results compare bit-for-bit with
   the DuckDB oracle.
 """

@@ -9,12 +9,13 @@ values. Usage:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from getl_spark.queries import all_oracles, all_queries  # noqa: E402
 from getl_spark.session import get_spark  # noqa: E402

@@ -21,4 +21,5 @@ def tmp_warehouse():
     shutil.rmtree(d, ignore_errors=True)
 
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")

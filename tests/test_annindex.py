@@ -11,7 +11,9 @@ from getl_spark.functions import simsearch
 
 @pytest.fixture(scope="module")
 def emb(spark):
-    return spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
 

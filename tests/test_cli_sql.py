@@ -7,12 +7,11 @@ import subprocess
 import sys
 
 import pytest
+from conftest import REPO
 
 from getl_spark.events import generate_change_events
 from getl_spark.lake import LakeCatalog
 from getl_spark.pipeline import CDCPipeline
-
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_register_views_sql_surface(spark, tmp_warehouse):
@@ -242,9 +241,11 @@ def test_cli_embdedup_ingest_and_maintenance(spark, tmp_path, capsys):
     maintenance run reopen under the stored config (no --dim repeat)."""
     from pyspark.sql import functions as F
 
+    from conftest import SF_DIR
+
     from getl_spark.__main__ import main
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     v1, v2 = str(tmp_path / "v1"), str(tmp_path / "v2")

@@ -106,6 +106,8 @@ class TestResolveAndRegister:
         import subprocess
         import sys
 
+        from conftest import REPO
+
         pq = str(tmp_path / "sales")
         spark.createDataFrame(
             [("emea", 10), ("emea", 5), ("apac", 7)], "region string, amt int"
@@ -121,7 +123,7 @@ class TestResolveAndRegister:
             "FROM sales_cfg WHERE region = '{who}';\n"
             "ECHO total={total};\n"
         )
-        env = dict(os.environ, PYTHONPATH="/root/repo")
+        env = dict(os.environ, PYTHONPATH=REPO)
         out = subprocess.run(
             [sys.executable, "-m", "getl_spark", "script",
              "--file", str(scr), "--config", cfg],
@@ -138,6 +140,8 @@ class TestResolveAndRegister:
         import subprocess
         import sys
 
+        from conftest import REPO
+
         pq = str(tmp_path / "t")
         spark.createDataFrame([(1,)], "x int").write.parquet(pq)
         cfg = _write(tmp_path, "cfg.json", {
@@ -150,7 +154,7 @@ class TestResolveAndRegister:
         })
         scr = tmp_path / "job.sql"
         scr.write_text("SET SELECT count(*) AS n FROM good_cfg;\nECHO n={n};\n")
-        env = dict(os.environ, PYTHONPATH="/root/repo")
+        env = dict(os.environ, PYTHONPATH=REPO)
         out = subprocess.run(
             [sys.executable, "-m", "getl_spark", "script",
              "--file", str(scr), "--config", cfg],

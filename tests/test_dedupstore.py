@@ -91,11 +91,13 @@ def test_dedup_cli_two_batches(spark, corpus, tmp_path):
     import subprocess
     import sys
 
+    from conftest import REPO
+
     wh = str(tmp_path / "wh")
     b1, b2 = str(tmp_path / "b1"), str(tmp_path / "b2")
     corpus.filter("doc_id < 100").write.parquet(b1)
     corpus.filter("doc_id >= 100 AND doc_id < 200").write.parquet(b2)
-    env = dict(os.environ, PYTHONPATH="/root/repo")
+    env = dict(os.environ, PYTHONPATH=REPO)
 
     def run(docs, out):
         r = subprocess.run(
@@ -193,7 +195,9 @@ def test_embedding_store_incremental_equals_one_shot(spark, tmp_path):
     from getl_spark.dedupstore import EmbDedupStore
     from getl_spark.functions import simsearch
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     params = dict(dim=64, threshold=0.3, n_bits=6, n_tables=4, seed=99,
@@ -437,7 +441,9 @@ def test_embedding_store_maintenance(spark, tmp_path):
     contracts as the text store."""
     from getl_spark.dedupstore import EmbDedupStore
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     params = dict(dim=64, threshold=0.3, n_bits=6, n_tables=4, seed=99,
@@ -482,7 +488,9 @@ def test_open_reconstructs_stored_config(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match="no dedup store"):
         DedupStore.open(str(tmp_path / "absent"))
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     ewh = str(tmp_path / "ewh")
@@ -763,7 +771,9 @@ def test_emb_crash_tail_replayed_after_later_batch_commits(spark, tmp_path):
     monotonicity error — and resolve it via the heals stamp."""
     from getl_spark.dedupstore import EmbDedupStore
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     params = dict(dim=64, threshold=0.3, n_bits=6, n_tables=4, seed=99,
@@ -846,7 +856,9 @@ def test_emb_prune_dropped_keeps_verdicts_and_replay_noop(spark, tmp_path):
     story no-op (the membership probe accepts verdict rows)."""
     from getl_spark.dedupstore import EmbDedupStore
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     params = dict(dim=64, threshold=0.3, n_bits=6, n_tables=4, seed=99,
@@ -876,11 +888,11 @@ def test_emb_prune_dropped_keeps_verdicts_and_replay_noop(spark, tmp_path):
 
 
 def test_legacy_tail_not_healed_by_disjoint_batch(spark, corpus, tmp_path):
-    """A round-6 (unstamped-ranges) first-batch tail has an unknowable
-    lower edge (lo=None). A DISJOINT higher batch reprocesses none of
-    its ids and must NOT claim it healed — otherwise the tail's later
-    replay passes the docs membership probe, no-ops, and its band rows
-    + verdicts are silently lost forever."""
+    """An older-layout tail (stamped max_doc_id, no id_ranges) has an
+    unknowable lower edge, so its ranges could only be guessed. The
+    store refuses that layout:
+    the next add_batch raises a ValueError naming it and asking for a
+    rebuild, before anything is appended."""
     wh = str(tmp_path / "wh")
     store = DedupStore(wh, **PARAMS)
     b1 = corpus.filter("doc_id < 100")
@@ -890,24 +902,14 @@ def test_legacy_tail_not_healed_by_disjoint_batch(spark, corpus, tmp_path):
         b1.select(F.col("doc_id").cast("bigint").alias("doc_id"), "text"),
         {"op": "add_batch", "batch": "r6tail", "max_doc_id": 4},
     )
+    version = store.docs.version
 
-    # a disjoint higher batch commits fully: it reprocessed none of the
-    # tail's ids, so it must not stamp the tail healed
     store_b = DedupStore(wh, **PARAMS)
-    store_b.add_batch(spark, corpus.filter("doc_id >= 100 AND doc_id < 200")).count()
-    assert not store_b.last_batch_stats.get("healed_tails")
-
-    # replaying batch 1 must REPROCESS it (not watermark-replay-noop)
-    store_c = DedupStore(wh, **PARAMS)
-    kept = _ids(store_c.add_batch(spark, b1))
-    assert kept == [1, 3, 4], kept  # 2 near-dups 1, same as a clean run
-    assert store_c.last_batch_stats.get("healed_tails") == ["r6tail"]
-    docs_df = store_c.docs.read(spark)
-    assert docs_df.count() == docs_df.select("doc_id").distinct().count()
-    rej = store_c.rejected_of(
-        spark, spark.createDataFrame([(2,)], "doc_id bigint")
-    )
-    assert [(r.doc_id, r.dup_of) for r in rej.collect()] == [(2, 1)]
+    with pytest.raises(ValueError, match="max_doc_id without id_ranges.*rebuild"):
+        store_b.add_batch(spark, corpus.filter("doc_id >= 100 AND doc_id < 200"))
+    store_b.docs.refresh()
+    assert store_b.docs.version == version
+    assert store_b.index.count_rows() == 0
 
 
 def test_unordered_crash_tail_never_claims_committed_ids(spark, corpus, tmp_path):

@@ -735,7 +735,9 @@ def test_ivf_trained_centroids_beat_random_and_stay_exact_at_probe_all(spark):
     random recall@5 at equal n_probe on the sf0.001 embeddings, (b)
     probe-all == exact brute force still holds with trained centroids,
     (c) training is deterministic (same centroids both calls)."""
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
+    from conftest import SF_DIR
+
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").withColumn(
         "embedding", F.transform("embedding", lambda x: x.cast("double"))
     )
     queries = emb.filter("vec_id < 20")

@@ -359,12 +359,14 @@ def test_multiprocess_commit_race_loses_nothing(tmp_warehouse):
     import subprocess
     import sys
 
+    from conftest import REPO
+
     cat = LakeCatalog(tmp_warehouse)
     cat.create_table("race", parse_ddl("w int, i int"), PartitionSpec.none())
     loc = os.path.join(tmp_warehouse, "race")
     worker = (
         "import sys, pandas as pd\n"
-        "sys.path.insert(0, '/root/repo')\n"
+        f"sys.path.insert(0, {REPO!r})\n"
         "from getl_spark.lake.table import LakeTable\n"
         "w = int(sys.argv[1])\n"
         "t = LakeTable.load(sys.argv[2])\n"

@@ -241,6 +241,8 @@ def test_two_pipelines_concurrent_writers_same_target(spark, tmp_warehouse):
     import subprocess
     import sys
 
+    from conftest import REPO
+
     from getl_spark.events import generate_change_events
     from getl_spark.oracle import reduce_events
 
@@ -249,7 +251,7 @@ def test_two_pipelines_concurrent_writers_same_target(spark, tmp_warehouse):
     CDCPipeline(spark, tmp_warehouse, num_buckets=16, name="seed")
     worker = (
         "import sys\n"
-        "sys.path.insert(0, '/root/repo')\n"
+        f"sys.path.insert(0, {REPO!r})\n"
         "from getl_spark.session import get_spark\n"
         "from getl_spark.events import generate_change_events\n"
         "from getl_spark.pipeline import CDCPipeline\n"
@@ -398,10 +400,9 @@ def test_lineage_epoch_latency_semantics(spark, tmp_warehouse, event_df):
 
 
 def test_lineage_legacy_table_upgrades_in_place(spark, tmp_warehouse):
-    """A pre-upgrade lineage table (no pipeline column, old
-    apply_latency_ms name) upgrades on first touch: NULL pipelines
-    backfill to 'tail', the latency column renames, and legacy rows
-    read back intact through the rename-aware pandas path."""
+    """A lineage table in the older layout (no pipeline column, the
+    latency column still named apply_latency_ms) is refused on open
+    with a ValueError naming the missing columns — no migration."""
     import pandas as pd
 
     from getl_spark.lake import LakeCatalog, PartitionSpec
@@ -426,17 +427,11 @@ def test_lineage_legacy_table_upgrades_in_place(spark, tmp_warehouse):
         ),
         {"epoch": 0},
     )
-    rec = LineageRecorder(cat)
-    cols = rec.table.schema().fieldNames()
-    assert "epoch_latency_ms" in cols and "apply_latency_ms" not in cols
-    pdf = rec.read_pandas()
-    assert len(pdf) == 1
-    assert int(pdf["epoch_latency_ms"].iloc[0]) == 42
-    assert pdf["pipeline"].iloc[0] == "tail"  # backfilled, not NULL
-    # a second recorder over the already-upgraded table is a no-op
-    sid = rec.table.current_schema_id
-    rec2 = LineageRecorder(cat)
-    assert rec2.table.current_schema_id == sid
+    version = legacy.version
+    with pytest.raises(ValueError, match=r"older layout.*epoch_latency_ms.*pipeline.*rebuild"):
+        LineageRecorder(cat)
+    # the check reads metadata only: the table is left as it was
+    assert cat.load_table("_lineage").version == version
 
 
 def test_schema_policy_merge_implicit_add(spark, tmp_warehouse, event_df, oracle_final):
@@ -558,35 +553,3 @@ def test_schema_policy_merge_in_mor_mode(spark, tmp_warehouse, event_df, oracle_
     assert pdf.loc[pdf["_seq"] <= 2000, "stars"].isna().all()
     assert (pdf.loc[pdf["_seq"] > 2000, "stars"] == pdf.loc[pdf["_seq"] > 2000, "_seq"] % 5).all()
     assert_final_state_matches(state.drop("_epoch", "stars").toPandas(), oracle_final)
-
-
-def test_lineage_null_pipeline_rows_backfill_even_when_column_exists(
-    spark, tmp_warehouse
-):
-    """ADVICE r4: a warehouse upgraded under a revision that ADDED the
-    pipeline column without backfilling has NULL legacy rows; the
-    backfill must gate on NULL presence, not column absence — else
-    those rows are invisible to metrics() forever."""
-    import pandas as pd
-
-    from getl_spark.lake import LakeCatalog, PartitionSpec
-    from getl_spark.lineage import LINEAGE_SCHEMA, LineageRecorder
-
-    cat = LakeCatalog(tmp_warehouse)
-    t = cat.create_table("_lineage", LINEAGE_SCHEMA, PartitionSpec.none())
-    t.append_pandas(
-        pd.DataFrame(
-            [
-                {"epoch": 0, "partition_id": 0, "seq_min": 1, "seq_max": 5,
-                 "event_count": 5, "bytes": 50, "epoch_latency_ms": 7,
-                 "pipeline": None},
-                {"epoch": 1, "partition_id": 0, "seq_min": 6, "seq_max": 9,
-                 "event_count": 4, "bytes": 40, "epoch_latency_ms": 8,
-                 "pipeline": "other"},
-            ]
-        ),
-        {"epoch": 0},
-    )
-    rec = LineageRecorder(cat, legacy_owner="tail")
-    pdf = rec.read_pandas().sort_values("epoch")
-    assert list(pdf["pipeline"]) == ["tail", "other"]  # NULL healed, named kept
